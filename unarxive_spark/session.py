@@ -3,6 +3,15 @@
 Defaults target local[N] testing but every knob is chosen for
 multi-executor scale (AQE, skew-join handling, Arrow batching):
 the same builder config ships to `spark-submit` unchanged.
+
+The driver heap is sized to the box: half of the memory the process can
+use (the smaller of physical memory and the cgroup limit, when one is
+set), capped at 48g with a 1g floor. The other half is left for the
+JVM's off-heap memory, the Python/Arrow workers, DuckDB and the test
+runner; a heap larger than the box lets the JVM grow until the kernel
+kills it. ``extra_conf["spark.driver.memory"]`` overrides the rule.
+Like every driver-memory setting, it only applies when the first
+SparkSession of a process launches the JVM.
 """
 
 from __future__ import annotations
@@ -36,11 +45,49 @@ _BASE_CONF: dict[str, str] = {
     "spark.driver.extraJavaOptions": (
         "-Djava.io.tmpdir=/tmp -Dderby.system.home=/tmp"
     ),
-    # local mode runs executors inside the driver JVM: size it for the
-    # bench-scale graphs (only applies at first JVM launch per process).
-    "spark.driver.memory": "48g",
+    # spark.driver.memory is not here: get_spark sizes it to the box (see
+    # default_driver_memory). local mode runs executors inside the driver
+    # JVM, so that heap is all the engine has.
     "spark.driver.maxResultSize": "4g",
 }
+
+_GIB = 1 << 30
+# Cap reached on boxes with 96 GiB or more: enough for the bench-scale graphs.
+_MAX_DRIVER_GIB = 48
+# cgroup v2, then v1: the first file present holds the memory limit.
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _cgroup_memory_limit_bytes() -> int | None:
+    """The cgroup memory limit in bytes, or None when no limit is set.
+
+    cgroup v2 writes ``max`` for no limit; v1 writes a number near 2^63,
+    which the ``min`` in :func:`default_driver_memory` discards.
+    """
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        return int(raw) if raw.isdigit() else None
+    return None
+
+
+def default_driver_memory() -> str:
+    """Half the memory this process can use, in whole GiB, within [1g, 48g]."""
+    usable = _physical_memory_bytes()
+    limit = _cgroup_memory_limit_bytes()
+    if limit is not None:
+        usable = min(usable, limit)
+    return f"{min(_MAX_DRIVER_GIB, max(1, usable // 2 // _GIB))}g"
 
 
 def get_spark(
@@ -54,13 +101,26 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count so test-scale
     shuffles don't fan out into thousands of empty tasks; on a real
-    cluster pass ~2-3x total cores.
+    cluster pass ~2-3x total cores. ``spark.driver.memory`` defaults to
+    :func:`default_driver_memory`.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The builder config :func:`get_spark` applies, without starting Spark."""
     conf = dict(_BASE_CONF)
+    conf["spark.driver.memory"] = default_driver_memory()
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     elif master.startswith("local["):
@@ -69,9 +129,7 @@ def get_spark(
             conf["spark.sql.shuffle.partitions"] = n
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return conf
 
 
 def stop_spark() -> None:
