@@ -75,9 +75,7 @@ def headline_queries(spark) -> dict[str, float]:
     _, dt = _timed(edges.count)
     times["edge_build"] += dt
     _, times["pagerank"] = _timed(
-        lambda: pagerank(
-            edges, tol=1e-6, max_iter=50, superstep_aqe=False
-        ).ranks.count()
+        lambda: pagerank(edges, tol=1e-6, max_iter=50).ranks.count()
     )
     _, times["components"] = _timed(
         lambda: connected_components(edges).components.count()
@@ -376,9 +374,7 @@ def _pagerank_leg_once(cores: int, n_edges: int) -> dict[str, float]:
         shuffle_partitions=cores * 2,
     )
     e = spark.read.parquet(EDGES_PATH)
-    # AQE off in the loop: identical plan every superstep, so adaptive
-    # re-planning is pure per-stage barrier overhead at this scale
-    res = pagerank(e, tol=-1.0, max_iter=SCALE_ITERS, superstep_aqe=False)
+    res = pagerank(e, tol=-1.0, max_iter=SCALE_ITERS)
     res.ranks.count()
     stop_spark()
     warm = res.superstep_secs[1:]

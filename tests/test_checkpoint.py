@@ -141,8 +141,8 @@ def test_deleted_commit_replays_superstep(edges_small):
         assert ck.last_committed() == 2
         res = pagerank(edges_small, tol=1e-8, max_iter=60, checkpoint_dir=d)
         assert res.converged and res.iterations == full.iterations
-        # superstep 3 ran again (salted float sums may differ in the
-        # last bits between runs)
+        # superstep 3 ran again (float sums may differ in the last bits
+        # between runs)
         assert res.deltas == pytest.approx(full.deltas[3:], rel=1e-9)
         got = {r["conv_id"]: r["rank"] for r in res.ranks.collect()}
         assert max(abs(got[v] - want[v]) for v in want) < 1e-9
@@ -266,5 +266,92 @@ def test_katz_and_influence_commit_every_round(edges_small):
         m = CheckpointManager(spark, f"{d}/ic").metrics().collect()
         assert [r["iteration"] for r in m] == [0, 1, 2]
         assert all(r["metric_value"] == r["n_rows"] for r in m)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_lineage_reads_the_listed_commits(edges_small):
+    """lineage() reads the commit files the driver listed — not a glob,
+    which Spark would probe as a path — and never the hidden in-progress
+    file a crash mid-commit leaves behind."""
+    d = tempfile.mkdtemp(prefix="files_ckpt_")
+    try:
+        pagerank(edges_small, tol=1e-8, max_iter=3, checkpoint_dir=d)
+        lin = os.path.join(d, "_lineage")
+        hidden = ".commit-00003.json.inprogress"
+        shutil.copy(
+            os.path.join(lin, "commit-00002.json"), os.path.join(lin, hidden)
+        )
+        ck = CheckpointManager(edges_small.sparkSession, d)
+        names = ck._commits()
+        assert sorted(names) == [f"commit-0000{i}.json" for i in range(3)]
+        files = ck.lineage().inputFiles()
+        assert sorted(os.path.basename(f) for f in files) == sorted(names)
+        assert not any(f.endswith(hidden) for f in files)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _path_graph(spark, n: int):
+    """v00 -> v01 -> ... -> v{n-1}: components need n-1 supersteps."""
+    return spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}", 1.0) for i in range(n - 1)],
+        "src_conv_id string, dst_conv_id string, weight double",
+    )
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        lambda e, k, d: pagerank(e, tol=-1.0, max_iter=k, checkpoint_dir=d),
+        lambda e, k, d: connected_components(e, max_iter=k, checkpoint_dir=d),
+        lambda e, k, d: label_propagation(e, n_iter=k, checkpoint_dir=d),
+    ],
+    ids=["pagerank", "components", "lpa"],
+)
+def test_superstep_runs_a_fixed_number_of_jobs(spark, loop, request):
+    """Each superstep of PageRank, components and LPA runs the same small
+    number of Spark jobs: it does not grow with the iteration, and the
+    durable write adds none."""
+    edges = _path_graph(spark, 12)
+    sc = spark.sparkContext
+    d = tempfile.mkdtemp(prefix="stepjobs_ckpt_")
+    per_step = {}
+    try:
+        for mode, durable in (("plain", False), ("durable", True)):
+            jobs = []
+            for k in (1, 2, 3):
+                group = f"{request.node.name}_{mode}_{k}"
+                sc.setJobGroup(group, group)
+                loop(edges, k, f"{d}/{mode}{k}" if durable else None)
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            # jobs of supersteps 1 and 2 (superstep 0 also fills the
+            # loop-invariant caches)
+            per_step[mode] = [b - a for a, b in zip(jobs, jobs[1:])]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        shutil.rmtree(d, ignore_errors=True)
+    steps = per_step["plain"]
+    assert steps[0] == steps[1], per_step
+    assert 1 <= steps[0] <= 4, per_step
+    assert per_step["durable"] == steps, per_step
+
+
+def test_lpa_resume(edges_small):
+    full = label_propagation(edges_small, n_iter=5)
+    want = {r["conv_id"]: r["label"] for r in full.labels.collect()}
+    d = tempfile.mkdtemp(prefix="lpa_ckpt_")
+    try:
+        # simulate a crash: only 2 supersteps commit
+        part = label_propagation(edges_small, n_iter=2, checkpoint_dir=d)
+        assert part.iterations == 2
+        ck = CheckpointManager(edges_small.sparkSession, d)
+        assert ck.last_committed() == 1
+        res = label_propagation(edges_small, n_iter=5, checkpoint_dir=d)
+        assert res.iterations == full.iterations == 5
+        got = {r["conv_id"]: r["label"] for r in res.labels.collect()}
+        assert got == want
+        iters = [r["iteration"] for r in ck.metrics().collect()]
+        assert iters == list(range(5))
     finally:
         shutil.rmtree(d, ignore_errors=True)

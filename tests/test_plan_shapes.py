@@ -79,9 +79,8 @@ def test_agg_has_partial_aggregation(spark):
 
 
 def test_pagerank_superstep_plan(spark):
-    """The per-iteration join must not re-shuffle the cached edge side:
-    edges are repartitioned('src') once; ranks (small) shuffle to meet
-    them. Assert the salted gather introduces the two-stage aggregate."""
+    """The salted gather (HITS's hub/authority sums) introduces the
+    two-stage aggregate: partial + final on (key, salt), then on key."""
     from unarxive_spark.operators.skew import salted_sum
 
     t = transcripts_from_events(spark, SF)
@@ -92,6 +91,42 @@ def test_pagerank_superstep_plan(spark):
     )
     plan = _plan(g)
     assert plan.count("HashAggregate") >= 3  # partial+final × two stages
+
+
+def _node_names(plan) -> list[str]:
+    """Node names of a physical plan, walked through its children (a
+    cached table's scan stands for its table: its plan is not a child)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        name for i in range(kids.size()) for name in _node_names(kids.apply(i))
+    ]
+
+
+def test_pagerank_superstep_has_one_exchange(edges_small, monkeypatch):
+    """A PageRank superstep's plan exchanges once — the gather on dst:
+    the edge table, the vertex table and the rank state are co-partitioned,
+    nothing is broadcast, and the dangling mass is a literal observed in
+    the previous superstep, not a nested-loop join."""
+    from unarxive_spark.operators.pagerank import pagerank
+    from unarxive_spark.sources.checkpoint import CheckpointManager
+
+    plans = []
+    write_state = CheckpointManager.write_state
+
+    def spy(self, iteration, state, observed=None):
+        # planned inside the loop, where it runs: the plan the job executes
+        plans.append(_node_names(state._jdf.queryExecution().executedPlan()))
+        return write_state(self, iteration, state, observed)
+
+    monkeypatch.setattr(CheckpointManager, "write_state", spy)
+    pagerank(edges_small, tol=-1.0, max_iter=3)
+    assert len(plans) == 3
+    for names in plans:
+        assert names.count("Exchange") == 1, names
+        assert "BroadcastExchange" not in names, names
+        assert "BroadcastNestedLoopJoin" not in names, names
 
 
 def test_ann_and_embedding_dedup_are_bucketed(spark):

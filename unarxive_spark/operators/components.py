@@ -8,8 +8,9 @@ component is the lexicographic min conv_id in it — exactly what the
 oracle (pure-Python union-find in tests) computes.
 
 Superstep = one join (labels onto the undirected adjacency, partitioned
-once) + one min-aggregation — the same gather-scatter shape as PageRank,
-checkpointed per iteration for lineage/resume.
+once) + one min-aggregation + a left join back onto the label state —
+the same gather-scatter shape as PageRank, one Spark job and one
+exchange per superstep, checkpointed per iteration for lineage/resume.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unarxive_spark.session import adaptive_off
 from unarxive_spark.sources.checkpoint import CheckpointManager
 
 
@@ -40,6 +42,7 @@ def undirected(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).filter(F.col("u") != F.col("v")).distinct()
 
 
+@adaptive_off
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
@@ -58,6 +61,7 @@ def connected_components(
     min conv_id) is identical either way."""
     spark = edges.sparkSession
     ckpt = CheckpointManager(spark, checkpoint_dir)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
         vertices = (
@@ -65,12 +69,11 @@ def connected_components(
             .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
             .distinct()
         )
-    adj = undirected(edges).repartition("u").cache()
-    adj.count()
+    # partitioned like the label state; the first superstep fills the cache
+    adj = undirected(edges).repartition(n_parts, "u").cache()
 
     resumed = ckpt.last_committed()
     if resumed is not None:
-        # older checkpoints carry 2 columns, newer ones also _old
         labels = ckpt.restore(resumed).select("conv_id", "component")
         start = resumed + 1
     else:
@@ -78,33 +81,32 @@ def connected_components(
             "conv_id", F.col("conv_id").alias("component")
         )
         start = 0
+    labels = labels.repartition(n_parts, "conv_id")
 
     converged = False
     it = start
     for it in range(start, max_iter):
-        # neighbor-min: push each vertex's label to its neighbors; the
-        # self leg doubles as the old-label carrier so the convergence
-        # count is a column diff on the materialized state instead of a
-        # second label-table join per superstep (guide §2.4)
-        pushed = adj.join(
-            labels.withColumnRenamed("conv_id", "u"), "u"
-        ).select(
-            F.col("v").alias("conv_id"),
-            "component",
-            F.lit(None)
-            .cast(labels.schema["component"].dataType)
-            .alias("_old"),
+        # neighbour-min: push each vertex's label to its neighbours and
+        # take the min per receiver (the gather, the one exchange); the
+        # state side of both joins is co-partitioned with adj and with
+        # the gather output, and the old label rides along so the
+        # convergence count is a column diff on the materialized state
+        # instead of a second label-table join per superstep (guide §2.4)
+        nbr_min = (
+            adj.join(
+                labels.withColumnRenamed("conv_id", "u").hint("shuffle_hash"),
+                "u",
+            )
+            .groupBy(F.col("v").alias("conv_id"))
+            .agg(F.min("component").alias("_nbr"))
         )
-        new_labels = (
-            labels.select(
-                "conv_id", "component", F.col("component").alias("_old")
-            )
-            .unionByName(pushed)
-            .groupBy("conv_id")
-            .agg(
-                F.min("component").alias("component"),
-                F.max("_old").alias("_old"),
-            )
+        new_labels = labels.join(
+            nbr_min.hint("shuffle_hash"), "conv_id", "left"
+        ).select(
+            "conv_id",
+            # least() skips the NULL of a vertex without neighbours
+            F.least("component", "_nbr").alias("component"),
+            F.col("component").alias("_old"),
         )
         if shortcut:
             # label(v) ← label(label(v)): labels are vertex ids, so the

@@ -12,8 +12,10 @@ oracle in tests):
   bipartite structures, so exact-match semantics pin the iteration
   count rather than a fixpoint).
 
-Shape: join + two-stage agg (count by (vertex,label), then argmax via
-max_by with a struct tie-break) — same partitioning story as PageRank.
+Shape: join + two-stage agg (weight by (vertex,label), then argmax via
+min over a struct tie-break) + a left join back onto the label state —
+same partitioning story as PageRank: one Spark job and one exchange
+per superstep.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unarxive_spark.session import adaptive_off
 from unarxive_spark.sources.checkpoint import CheckpointManager
 
 
@@ -51,6 +54,7 @@ def _undirected_weighted(edges: DataFrame) -> DataFrame:
     )
 
 
+@adaptive_off
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 5,
@@ -58,36 +62,45 @@ def label_propagation(
 ) -> LPAResult:
     spark = edges.sparkSession
     ckpt = CheckpointManager(spark, checkpoint_dir)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     vertices = (
         edges.select(F.col("src_conv_id").alias("conv_id"))
         .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
         .distinct()
     )
-    adj = _undirected_weighted(edges).repartition("u").cache()
-    adj.count()
+    # partitioned like the label state; the first superstep fills the cache
+    adj = _undirected_weighted(edges).repartition(n_parts, "u").cache()
 
     resumed = ckpt.last_committed()
     if resumed is not None:
-        # older checkpoints carry 2 columns, newer ones also _old
         labels = ckpt.restore(resumed).select("conv_id", "label")
         start = resumed + 1
     else:
         labels = vertices.select("conv_id", F.col("conv_id").alias("label"))
         start = 0
+    labels = labels.repartition(n_parts, "conv_id")
 
     it = start
     for it in range(start, n_iter):
-        # gather neighbor labels: v receives u's label with weight w
-        received = adj.join(
-            labels.withColumnRenamed("conv_id", "u"), "u"
-        ).select(F.col("v").alias("conv_id"), "label", "w")
+        # gather neighbour labels: v receives u's label with weight w.
+        # The state side of the join is co-partitioned with adj; the
+        # received rows are exchanged ONCE, by receiver, so both
+        # aggregates and the join back onto the state need no other
+        # exchange
+        received = (
+            adj.join(
+                labels.withColumnRenamed("conv_id", "u").hint("shuffle_hash"),
+                "u",
+            )
+            .select(F.col("v").alias("conv_id"), "label", "w")
+            .repartition(n_parts, "conv_id")
+        )
         tallies = received.groupBy("conv_id", "label").agg(
             F.sum("w").alias("tw")
         )
-        # argmax weight, tie-break min label: max_by over (tw, reversed label)
-        # implemented as max(struct(tw desc-proxy…)) — use min over struct
-        # (negative weight, label) for a single deterministic pass.
+        # argmax weight, tie-break min label: min over the struct
+        # (negative weight, label) in a single deterministic pass
         winner = tallies.groupBy("conv_id").agg(
             F.min(F.struct((-F.col("tw")).alias("nw"), F.col("label"))).alias(
                 "m"
@@ -99,7 +112,9 @@ def label_propagation(
         # column diff on the materialized state instead of a second
         # label-table join per superstep (guide §2.4; the same fusion
         # as connected_components)
-        new_labels = labels.join(winner, "conv_id", "left").select(
+        new_labels = labels.join(
+            winner.hint("shuffle_hash"), "conv_id", "left"
+        ).select(
             "conv_id",
             F.coalesce(F.col("_win"), F.col("label")).alias("label"),
             F.col("label").alias("_old"),

@@ -7,20 +7,31 @@ Semantics (matched 1e-6 by the numpy oracle in tests/test_pagerank.py):
   uniformly each superstep (Σ ranks stays 1 exactly)
 - convergence on max|Δrank| < tol
 
-Superstep dataflow (SURVEY.md §7 L3):
-    ranks ⋈ edges_norm ON src           (big-big: both sides
-                                         hash-partitioned on the join key;
-                                         AQE handles residual skew)
-    → salted_sum over dst               (skew-bounded gather, map-side
-                                         partial agg + bounded reduce keys)
-    → left join onto vertices, fill 0   (vertices w/o in-edges)
-    → damping + dangling redistribution (scalar broadcast)
-    → CheckpointManager.superstep       (one pass: plan truncation,
-                                         observed delta, resume lineage)
+Superstep dataflow (SURVEY.md §7 L3), one Spark job per superstep:
+    ranks ⋈ edges_norm ON src           (co-partitioned: no exchange)
+    → groupBy(dst).sum                  (the gather: the ONE exchange;
+                                         map-side partial aggregation
+                                         leaves a hub at most one row
+                                         per map task)
+    → left join onto the rank state     (co-partitioned with the gather
+                                         output: no exchange)
+    → damping + dangling redistribution (the dangling mass is a literal)
+    → CheckpointManager.superstep       (one job: plan truncation,
+                                         observed delta and dangling mass,
+                                         durable state and lineage)
 
-The edge table is normalized and repartitioned by ``src_conv_id`` ONCE
-and cached: per-iteration work reuses that layout, so only the small
-ranks side shuffles each superstep (SURVEY.md §4.3).
+Loop-invariant tables are built once with the gather's partition count
+``n`` = ``spark.sql.shuffle.partitions`` and cached: ``edges_norm``
+(transition probabilities) by ``src``, the vertex table (with the
+``has_out`` dangling flag) by ``conv_id``. The rank state inherits the
+vertex table's partitioning, and ``shuffle_hash`` hints keep both
+superstep joins on that layout, so nothing is broadcast and nothing but
+the gather is exchanged (SURVEY.md §4.3). The operator runs with AQE
+off (``session.adaptive_off``): an adaptive plan reports no output
+partitioning, so the checkpointed state would lose its layout. The
+dangling mass of the next superstep is ``sum(rank where has_out = 0)``
+over the new state, observed in the job that materializes it and
+passed on as a literal.
 
 Reference analog: the reference has no PageRank; this is the north-rule
 analytics layer over its citation network (README.md:27-32), with
@@ -33,11 +44,10 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from unarxive_spark.functions.hashing import h64
-from unarxive_spark.operators.skew import salted_sum
+from unarxive_spark.session import adaptive_off
 from unarxive_spark.sources.checkpoint import CheckpointManager
 
 RANK_SCHEMA = "conv_id string, rank double"
@@ -62,6 +72,7 @@ def _vertices(edges: DataFrame) -> DataFrame:
     )
 
 
+@adaptive_off
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -69,11 +80,9 @@ def pagerank(
     max_iter: int = 100,
     weighted: bool = True,
     checkpoint_dir: str | None = None,
-    n_salts: int = 16,
     vertices: DataFrame | None = None,
     initial_ranks: DataFrame | None = None,
     personalization: list[str] | None = None,
-    superstep_aqe: bool = True,
 ) -> PageRankResult:
     """Run PageRank to convergence. ``checkpoint_dir`` enables resumable
     per-iteration commits; a rerun with the same dir continues from the
@@ -91,36 +100,30 @@ def pagerank(
     over the set) — personalized PageRank ("conversations related to
     these"). Dangling mass teleports to the same set. None = classic
     uniform teleport.
-
-    ``superstep_aqe=False`` disables adaptive execution INSIDE the
-    superstep loop only (restored after): each superstep's plan is
-    identical across iterations, so AQE's per-stage re-planning barrier
-    is pure overhead here — at sandbox scale it is a measurable part of
-    the ~2 s/superstep serial floor. Keep the default (on) when edge
-    skew is unknown; the explicit salting already bounds the gather.
-
-    The dangling-mass term costs NO extra join per superstep: the rank
-    state carries a ``has_out`` flag (computed once from the edge table),
-    so the mass is a filter + 1-row aggregate over the state itself,
-    broadcast back into the plan.
     """
     spark = edges.sparkSession
     ckpt = CheckpointManager(spark, checkpoint_dir)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
         vertices = _vertices(edges)
-    # vertex table with the dangling flag, co-partitioned with the
-    # gather output and cached ONCE for the whole run
+    # vertex table with the dangling flag, partitioned like the rank
+    # state and cached ONCE for the whole run
     src_ids = edges.select(F.col("src_conv_id").alias("conv_id")).distinct()
     vertices = (
         vertices.join(src_ids.withColumn("_ho", F.lit(1)), "conv_id", "left")
         .select(
             "conv_id", F.coalesce("_ho", F.lit(0)).alias("has_out")
         )
-        .repartition("conv_id")
+        .repartition(n_parts, "conv_id")
         .cache()
     )
-    n = vertices.count()
+    # danglers are counted from the built vertex table itself: correct
+    # even when a caller-supplied ``vertices`` frame omits some edge
+    # sources (n - #sources would undercount and leak rank mass)
+    n, n_dangling = vertices.agg(
+        F.count(F.lit(1)), F.count_if(F.col("has_out") == 0)
+    ).collect()[0]
     if n == 0:
         vertices.unpersist()
         empty = spark.createDataFrame([], RANK_SCHEMA)
@@ -129,95 +132,90 @@ def pagerank(
     w = F.col("weight") if weighted else F.lit(1.0)
     out_norm = edges.groupBy("src_conv_id").agg(F.sum(w).alias("out_w"))
     # transition probability per edge, fixed across iterations; the
-    # gather salt is a pure function of src, so it is hashed ONCE here
-    # instead of md5-ing every edge every superstep (identical groups →
-    # bit-identical partial sums)
+    # first superstep fills the cache
     edges_norm = (
         edges.join(out_norm, "src_conv_id")
         .select(
             F.col("src_conv_id").alias("src"),
             F.col("dst_conv_id").alias("dst"),
             (w / F.col("out_w")).alias("p"),
-            F.pmod(h64(F.col("src_conv_id")), F.lit(n_salts)).alias(
-                "_salt"
-            ),
         )
-        .repartition("src")
+        .repartition(n_parts, "src")
         .cache()
     )
-    edges_norm.count()  # materialize the co-partitioned layout once
-    # count danglers from the built vertex table itself: correct even
-    # when a caller-supplied ``vertices`` frame omits some edge sources
-    # (n - src_ids.count() would undercount and leak rank mass)
-    n_dangling = vertices.filter(F.col("has_out") == 0).count()
+
+    def dangling_sum(col: str = "rank"):
+        return F.coalesce(
+            F.sum(F.when(F.col("has_out") == 0, F.col(col))), F.lit(0.0)
+        )
 
     start_iter = 0
     resumed = ckpt.last_committed()
     if resumed is not None:
-        ranks = ckpt.restore(resumed)
+        restored = ckpt.restore(resumed).select(
+            "conv_id", "rank", "has_out"
+        )
+        dmass = restored.agg(dangling_sum()).collect()[0][0]
+        ranks = restored.repartition(n_parts, "conv_id")
         start_iter = resumed + 1
     elif initial_ranks is not None:
-        seeded = vertices.join(
-            initial_ranks.select("conv_id", F.col("rank").alias("_r0")),
-            "conv_id",
-            "left",
-        ).select(
-            "conv_id",
-            F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"),
-            "has_out",
+        # one job: the seeded state, its total and its dangling mass
+        obs = Observation()
+        seeded = (
+            vertices.join(
+                initial_ranks.select("conv_id", F.col("rank").alias("_r0")),
+                "conv_id",
+                "left",
+            )
+            .select(
+                "conv_id",
+                F.coalesce("_r0", F.lit(1.0 / n)).alias("_r"),
+                "has_out",
+            )
+            .observe(
+                obs, F.sum("_r").alias("t"), dangling_sum("_r").alias("d")
+            )
+            .localCheckpoint(eager=True)
         )
-        total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
+        total = obs.get["t"] or 1.0
+        dmass = obs.get["d"] / total
         ranks = seeded.select(
             "conv_id",
-            (F.col("rank") / F.lit(float(total))).alias("rank"),
+            (F.col("_r") / F.lit(float(total))).alias("rank"),
             "has_out",
-        ).localCheckpoint(eager=True)
+        )
     else:
         ranks = vertices.select(
             "conv_id", F.lit(1.0 / n).alias("rank"), "has_out"
         )
+        dmass = n_dangling / n
 
+    if personalization:
+        # teleport vector p(v): 1/|S| on the source set, else 0
+        p_v = F.when(
+            F.col("conv_id").isin(*personalization),
+            F.lit(1.0 / len(personalization)),
+        ).otherwise(F.lit(0.0))
+    else:
+        p_v = F.lit(1.0 / n)
     deltas: list[float] = []
     superstep_secs: list[float] = []
     converged = False
     it = start_iter
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_before = spark.conf.get(aqe_key)
-    if not superstep_aqe:
-        spark.conf.set(aqe_key, "false")
     try:
         for it in range(start_iter, max_iter):
             t_iter = time.monotonic()
-            contribs = edges_norm.join(
-                ranks.select(
-                    F.col("conv_id").alias("src"), "rank"
-                ),
-                "src",
-            ).select(
-                "dst", (F.col("p") * F.col("rank")).alias("c"), "_salt"
-            )
-            gathered = salted_sum(
-                contribs, key="dst", value=F.sum("c"), out="g",
-                salt_from="src", n_salts=n_salts, salt_col="_salt",
-            )
-            # Dangling mass: filter + 1-row aggregate over the CURRENT
-            # state (the has_out flag rides in the state rows — no join),
-            # broadcast back into the plan. NO per-iteration driver
-            # round-trip.
-            if n_dangling:
-                dmass_df = ranks.filter(F.col("has_out") == 0).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+            gathered = (
+                edges_norm.join(
+                    ranks.select(
+                        F.col("conv_id").alias("src"), "rank"
+                    ).hint("shuffle_hash"),
+                    "src",
                 )
-            else:
-                dmass_df = spark.range(1).select(F.lit(0.0).alias("_dm"))
-            if personalization:
-                # teleport vector p(v): 1/|S| on the source set, else 0
-                p_v = F.when(
-                    F.col("conv_id").isin(*personalization),
-                    F.lit(1.0 / len(personalization)),
-                ).otherwise(F.lit(0.0))
-            else:
-                p_v = F.lit(1.0 / n)
+                .groupBy("dst")
+                .agg(F.sum(F.col("p") * F.col("rank")).alias("g"))
+                .withColumnRenamed("dst", "conv_id")
+            )
             # The state rows ARE the vertex set (invariant from init),
             # so building the new state from the old one carries the
             # previous rank along for free — the convergence delta then
@@ -227,46 +225,37 @@ def pagerank(
                 ranks.select(
                     "conv_id", F.col("rank").alias("_prev"), "has_out"
                 )
-                .join(
-                    gathered.withColumnRenamed("dst", "conv_id"),
-                    "conv_id",
-                    "left",
-                )
-                .crossJoin(F.broadcast(dmass_df))
+                .join(gathered.hint("shuffle_hash"), "conv_id", "left")
                 .select(
                     "conv_id",
                     (
-                        p_v
-                        * (
-                            F.lit(1.0 - damping)
-                            + F.lit(damping) * F.col("_dm")
-                        )
+                        p_v * F.lit((1.0 - damping) + damping * dmass)
                         + F.lit(damping) * F.coalesce(F.col("g"), F.lit(0.0))
                     ).alias("rank"),
                     "has_out",
                     "_prev",
                 )
             )
-            # One Spark pass per superstep: materialize (plan truncation +
-            # resumable state) with the convergence delta observed in the
-            # same job. Fixed-iteration mode (tol < 0) observes no delta.
-            new_ranks_m, delta = ckpt.superstep(
+            # One Spark job per superstep: materialize (plan truncation +
+            # resumable state) with the convergence delta and the next
+            # dangling mass observed in it. Fixed-iteration mode (tol < 0)
+            # observes no delta.
+            ranks, delta, seen = ckpt.superstep(
                 it,
                 new_ranks,
                 "max_abs_delta",
                 F.max(F.abs(F.col("rank") - F.col("_prev")))
                 if tol >= 0
                 else float("inf"),
+                observe={"dmass": dangling_sum()},
             )
+            dmass = seen["dmass"]
             deltas.append(delta)
-            ranks = new_ranks_m
             superstep_secs.append(time.monotonic() - t_iter)
             if delta < tol:
                 converged = True
                 break
     finally:
-        if not superstep_aqe:
-            spark.conf.set(aqe_key, aqe_before)
         # loop-invariant caches: the result is checkpointed state, so
         # nothing downstream reads them (refresh reuses one session)
         edges_norm.unpersist()

@@ -36,8 +36,8 @@ def salted_sum(
     """Two-stage skew-resistant ``groupBy(key).agg(sum(value) as out)``.
 
     ``salt_from`` is a column whose hash spreads a hot key's rows across
-    ``n_salts`` reduce-side groups (for the PageRank gather: key=dst,
-    salt_from=src).
+    ``n_salts`` reduce-side groups (for HITS's authority gather:
+    key=dst, salt_from=src).
 
     The salt is the portable md5-derived ``h64`` (CLAUDE.md invariant:
     portable hashing only in oracle-checked paths) — the salt never
@@ -45,7 +45,7 @@ def salted_sum(
     double-summation order deterministic across engines/runs.
 
     ``salt_col`` names a PRECOMPUTED ``pmod(h64(salt_from), n_salts)``
-    column: iterative callers (PageRank/HITS) hash the salt source once
+    column: iterative callers (HITS) hash the salt source once
     on the cached edge table instead of re-running md5 over every edge
     every superstep (guide §2.3 — narrower per-row work before the
     exchange). The groups are identical by construction, so the partial

@@ -16,6 +16,7 @@ SparkSession of a process launches the JVM.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -137,3 +138,26 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def adaptive_off(fn):
+    """Decorator: run ``fn(df, ...)`` with adaptive query execution off in
+    ``df``'s session, restoring the setting on return.
+
+    For superstep loops over co-partitioned state: an adaptive plan
+    reports no output partitioning, so a state it materializes would
+    lose its hash layout and be re-exchanged every superstep, and each
+    shuffle stage would run as a Spark job of its own."""
+
+    @functools.wraps(fn)
+    def inner(df, *args, **kwargs):
+        conf = df.sparkSession.conf
+        key = "spark.sql.adaptive.enabled"
+        before = conf.get(key)
+        conf.set(key, "false")
+        try:
+            return fn(df, *args, **kwargs)
+        finally:
+            conf.set(key, before)
+
+    return inner

@@ -9,19 +9,23 @@ mid-iteration". Reference analog: the batch resume protocol —
 runtime/success metrics (:637-661).
 
 Superstep loops make ONE call per superstep,
-:meth:`CheckpointManager.superstep`, which runs one Spark pass over the
-new state and then, in durable mode, writes it and commits it:
+:meth:`CheckpointManager.superstep`, which runs one Spark job over the
+new state and then, in durable mode, commits it:
 
-1. **Materialize** (:meth:`~CheckpointManager.write_state`) —
-   ``localCheckpoint(eager=True)`` in both modes: the superstep's plan
-   runs exactly once and the blocks cut the logical plan that otherwise
-   grows O(iterations) (SURVEY.md §4.1). The convergence metric and the
-   per-partition row counts ride in that same job as ``DataFrame.observe``
-   metrics — no second action over the state.
-2. **State** (durable mode only) — ``{root}/iter=NNNNN`` parquet is written
-   from the materialized blocks (no recompute, no re-read). The loop
-   keeps the in-memory frame, so the next superstep also keeps the
-   state's hash partitioning.
+1. **Materialize** (:meth:`~CheckpointManager.write_state`) — the state
+   is local-checkpointed: its plan runs exactly once and the blocks cut
+   the logical plan that otherwise grows O(iterations) (SURVEY.md §4.1).
+   The convergence metric, any extra aggregates the loop asks for and
+   (durable mode) the per-partition row counts ride in that same job as
+   ``DataFrame.observe`` metrics — no second action over the state.
+   Non-durable: ``localCheckpoint(eager=True)``, which is the job.
+2. **State** (durable mode only) — ``localCheckpoint(eager=False)``, then
+   ``{root}/iter=NNNNN`` parquet is written from that frame with the
+   observations on the write: the write job computes the state once and
+   stores the checkpoint blocks as it goes. The loop keeps the in-memory
+   frame, so the next superstep reads those blocks (no recompute, no
+   re-read) and keeps the state's hash partitioning (when the plan ran
+   without AQE, see ``session.adaptive_off``).
 3. **Commit** (durable mode only, :meth:`~CheckpointManager.log_lineage`)
    — one small JSON-lines file per iteration, ``LINEAGE_SCHEMA`` rows (one
    per partition: row count, metric, wall time, ``status='committed'``),
@@ -104,7 +108,8 @@ class CheckpointManager:
         state: DataFrame,
         metric_name: str,
         metric: Column | float,
-    ) -> tuple[DataFrame, Any]:
+        observe: dict[str, Column] | None = None,
+    ) -> tuple:
         """Materialize, persist and commit one superstep → ``(frame,
         metric value)``.
 
@@ -112,25 +117,15 @@ class CheckpointManager:
         in the materializing job; its value is returned as Spark gives
         it, e.g. an int for a count) or a number the caller already
         knows. The returned frame is the materialized state: build the
-        next superstep from it."""
-        observed = []
+        next superstep from it.
+
+        ``observe`` maps names to more aggregate Columns over ``state``,
+        observed in the same job; with it the call returns ``(frame,
+        metric value, {name: value})``."""
+        observed = {f"x_{k}": c for k, c in (observe or {}).items()}
         if isinstance(metric, Column):
-            observed.append(metric.alias("metric"))
-        if self.enabled:
-            state = state.withColumn(_PID, F.spark_partition_id())
-            observed.append(
-                F.histogram_numeric(
-                    F.col(_PID), F.lit(_PARTITION_BINS)
-                ).alias("parts")
-            )
-        obs = None
-        if observed:
-            obs = Observation()
-            state = state.observe(obs, *observed)
-            if self.enabled:
-                state = state.drop(_PID)
-        out = self.write_state(iteration, state)
-        got = obs.get if obs is not None else {}
+            observed["metric"] = metric
+        out, got = self.write_state(iteration, state, observed)
         value = got["metric"] if isinstance(metric, Column) else metric
         if self.enabled:
             parts = {int(b["x"]): int(b["y"]) for b in got["parts"] or []}
@@ -140,16 +135,46 @@ class CheckpointManager:
                 metric_name,
                 float("nan") if value is None else float(value),
             )
-        return out, value
+        if observe is None:
+            return out, value
+        return out, value, {k: got[f"x_{k}"] for k in observe}
 
-    def write_state(self, iteration: int, state: DataFrame) -> DataFrame:
-        """Materialize one superstep's state exactly once (truncating the
-        plan lineage) and, in durable mode, write ``iter=N`` from the
-        materialized blocks. Returns the materialized frame."""
-        out = state.localCheckpoint(eager=True)
-        if self.enabled:
-            out.write.mode("overwrite").parquet(self._state_path(iteration))
-        return out
+    def write_state(
+        self,
+        iteration: int,
+        state: DataFrame,
+        observed: dict[str, Column] | None = None,
+    ) -> tuple[DataFrame, dict[str, Any]]:
+        """Materialize one superstep's state in one Spark job (truncating
+        the plan lineage) and, in durable mode, write ``iter=N`` in that
+        same job. ``observed`` (name → aggregate Column) is observed in
+        the job; durable mode adds the per-partition row histogram as
+        ``parts``. Returns the materialized frame and the observed values.
+        """
+        observed = dict(observed or {})
+        if not self.enabled:
+            if not observed:
+                return state.localCheckpoint(eager=True), {}
+            obs = Observation()
+            out = state.observe(
+                obs, *(c.alias(k) for k, c in observed.items())
+            ).localCheckpoint(eager=True)
+            return out, obs.get
+        # lazy: the write below is the job that computes the state, and
+        # it stores the checkpoint blocks the next superstep reads
+        out = state.localCheckpoint(eager=False)
+        observed["parts"] = F.histogram_numeric(
+            F.col(_PID), F.lit(_PARTITION_BINS)
+        )
+        obs = Observation()
+        (
+            out.withColumn(_PID, F.spark_partition_id())
+            .observe(obs, *(c.alias(k) for k, c in observed.items()))
+            .drop(_PID)
+            .write.mode("overwrite")
+            .parquet(self._state_path(iteration))
+        )
+        return out, obs.get
 
     def log_lineage(
         self,
@@ -220,12 +245,15 @@ class CheckpointManager:
 
     def lineage(self) -> DataFrame:
         """All committed lineage rows (``LINEAGE_SCHEMA``)."""
-        if not self._commits():
+        names = self._commits()
+        if not names:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        # the listed files themselves, not a glob: Spark would probe a
+        # glob as a path for a metadata directory and log the failure
         return (
             self.spark.read.schema(LINEAGE_SCHEMA)
             .option("mode", "FAILFAST")
-            .json(f"{self._lineage_path}/commit-*.json")
+            .json([f"{self._lineage_path}/{n}" for n in names])
         )
 
     def last_committed(self) -> int | None:
