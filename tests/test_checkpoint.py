@@ -1,17 +1,25 @@
 """Checkpoint/lineage protocol: resume-equivalence (kill at iteration k,
 resume → same converged scores — SURVEY.md §5 invariant tests)."""
 
+import importlib
+import inspect
 import os
+import pkgutil
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+import unarxive_spark.operators as operators
+from unarxive_spark import cli
 from unarxive_spark.operators.components import connected_components
 from unarxive_spark.operators.influence import ic_influence_spread
 from unarxive_spark.operators.katz import katz_centrality
-from unarxive_spark.operators.lpa import label_propagation
+from unarxive_spark.operators.lpa import (
+    label_propagation,
+    seeded_label_propagation,
+)
 from unarxive_spark.operators.pagerank import pagerank
 from unarxive_spark.sources.checkpoint import LINEAGE_SCHEMA, CheckpointManager
 
@@ -355,3 +363,109 @@ def test_lpa_resume(edges_small):
         assert iters == list(range(5))
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_influence_resume(edges_small):
+    args = dict(n_sims=2, p_permille=400, n_seeds=2)
+    want = sorted(ic_influence_spread(edges_small, hops=4, **args).collect())
+    d = tempfile.mkdtemp(prefix="ic_ckpt_")
+    try:
+        # simulate a crash: only 2 hops commit
+        ic_influence_spread(edges_small, hops=2, checkpoint_dir=d, **args)
+        ck = CheckpointManager(edges_small.sparkSession, d)
+        assert ck.last_committed() == 1
+        got = sorted(
+            ic_influence_spread(
+                edges_small, hops=4, checkpoint_dir=d, **args
+            ).collect()
+        )
+        assert got == want
+        assert [r["iteration"] for r in ck.metrics().collect()] == [0, 1, 2, 3]
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# An operator takes ``checkpoint_dir`` only if a rerun on the directory
+# resumes. Each one's interrupt-and-resume test:
+#   pagerank              test_pagerank_resume_equivalence,
+#                         test_deleted_commit_replays_superstep
+#   connected_components  test_components_resume
+#   label_propagation     test_lpa_resume
+#   katz_centrality       test_katz_and_influence_commit_every_round
+#   ic_influence_spread   test_influence_resume
+RESUMABLE = {
+    "pagerank",
+    "connected_components",
+    "label_propagation",
+    "katz_centrality",
+    "ic_influence_spread",
+}
+
+
+def test_only_resuming_operators_take_checkpoint_dir():
+    durable = set()
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            if "checkpoint_dir" in inspect.signature(fn).parameters:
+                durable.add(name)
+    assert durable == RESUMABLE
+
+
+def test_cli_checkpoint_dir_only_where_it_resumes():
+    for cmd in ("ktruss", "anf", "louvain"):
+        argv = [cmd, "--edges", "e", "--out", "o", "--checkpoint-dir", "d"]
+        # argparse rejects the flag before any session starts
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv)
+        assert exc.value.code == 2, cmd
+
+
+def _seeded_lpa(edges):
+    seeds = (
+        edges.select(F.col("src_conv_id").alias("conv_id"))
+        .distinct()
+        .orderBy("conv_id")
+        .limit(2)
+        .withColumn("label", F.col("conv_id"))
+    )
+    return seeded_label_propagation(edges, seeds, n_iter=5)
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        lambda e: pagerank(e, tol=-1.0, max_iter=5),
+        lambda e: connected_components(e, max_iter=5),
+        lambda e: label_propagation(e, n_iter=5),
+        _seeded_lpa,
+        lambda e: katz_centrality(e, rounds=4),
+        lambda e: ic_influence_spread(e, hops=4),
+    ],
+    ids=["pagerank", "components", "lpa", "seeded_lpa", "katz", "influence"],
+)
+def test_failed_superstep_releases_loop_caches(
+    spark, transcripts_small, edges_small, monkeypatch, loop
+):
+    """A superstep that raises leaves no loop-invariant frame cached."""
+    real = CheckpointManager.superstep
+
+    def superstep(self, iteration, *args, **kwargs):
+        if iteration == 1:
+            raise RuntimeError("superstep 1 interrupted")
+        return real(self, iteration, *args, **kwargs)
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    try:
+        assert cache.isEmpty()
+        monkeypatch.setattr(CheckpointManager, "superstep", superstep)
+        with pytest.raises(RuntimeError, match="superstep 1 interrupted"):
+            loop(edges_small)
+        assert cache.isEmpty()
+    finally:
+        # the session fixtures stay cached for the tests after this one
+        transcripts_small.cache()
+        edges_small.cache()

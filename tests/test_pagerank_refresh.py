@@ -1,10 +1,13 @@
 """Streaming PageRank refresh: exactly-once delta mining + warm-started
 re-rank reaching the oracle fixpoint in fewer supersteps than cold."""
 
+import pytest
+from pyspark.errors import AnalysisException
+
 from unarxive_spark.datagen import synth_transcripts
 from unarxive_spark.operators.pagerank import pagerank
 from unarxive_spark.streaming.incremental import compact_edges
-from unarxive_spark.streaming.refresh import pagerank_refresh
+from unarxive_spark.streaming.refresh import _last_snapshot, pagerank_refresh
 
 from tests.oracles import pagerank_oracle
 
@@ -53,3 +56,12 @@ def test_streaming_refresh_cycle(spark, tmp_path):
     r3 = pagerank_refresh(spark, in_dir, landing, ckpt, ranks)
     assert spark.read.parquet(landing).count() == n_landing_2
     assert r3.iterations <= 2  # already at the fixpoint
+
+
+def test_last_snapshot_cold_start_only_when_missing(spark, tmp_path):
+    # nothing published yet: a cold start
+    assert _last_snapshot(spark, str(tmp_path / "ranks")) is None
+    # a directory without parquet is unreadable state, not a cold start
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(AnalysisException):
+        _last_snapshot(spark, str(tmp_path / "empty"))

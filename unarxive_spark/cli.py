@@ -11,7 +11,7 @@ multi-executor clusters):
 Commands mirror the reference's entry points (SURVEY.md §3):
   mine-edges   EP1/EP2 analog: transcripts → edge table
   pagerank     EP3 analytics: PageRank with checkpoint/resume
-  components   connected components
+  components   connected components with checkpoint/resume
   lpa          label propagation
   triangles    triangle count
   vertices     reporting-layer vertex attribute table
@@ -66,15 +66,12 @@ def main(argv: list[str] | None = None) -> None:
             g.add_argument("--n-iter", type=int, default=5)
         if name == "ktruss":
             g.add_argument("--k", type=int, default=3)
-            g.add_argument("--checkpoint-dir", default=None)
         if name == "anf":
             g.add_argument("--n-regs", type=int, default=8)
             g.add_argument("--max-iter", type=int, default=30)
-            g.add_argument("--checkpoint-dir", default=None)
         if name == "louvain":
             g.add_argument("--max-rounds", type=int, default=20)
             g.add_argument("--levels", type=int, default=1)
-            g.add_argument("--checkpoint-dir", default=None)
         if name == "walks":
             g.add_argument("--walk-length", type=int, default=5)
             g.add_argument("--walks-per-vertex", type=int, default=1)
@@ -150,19 +147,12 @@ def main(argv: list[str] | None = None) -> None:
         from unarxive_spark.operators.ktruss import k_truss
 
         e = spark.read.parquet(args.edges)
-        k_truss(
-            e, args.k, checkpoint_dir=args.checkpoint_dir
-        ).write.mode("overwrite").parquet(args.out)
+        k_truss(e, args.k).write.mode("overwrite").parquet(args.out)
     elif args.cmd == "anf":
         from unarxive_spark.operators.anf import anf, anf_estimates
 
         e = spark.read.parquet(args.edges)
-        res = anf(
-            e,
-            n_regs=args.n_regs,
-            max_iter=args.max_iter,
-            checkpoint_dir=args.checkpoint_dir,
-        )
+        res = anf(e, n_regs=args.n_regs, max_iter=args.max_iter)
         anf_estimates(res).write.mode("overwrite").parquet(args.out)
         print(
             f"anf: iterations={res.iterations} converged={res.converged}"
@@ -171,12 +161,7 @@ def main(argv: list[str] | None = None) -> None:
         from unarxive_spark.operators.louvain import louvain
 
         e = spark.read.parquet(args.edges)
-        res = louvain(
-            e,
-            max_rounds=args.max_rounds,
-            levels=args.levels,
-            checkpoint_dir=args.checkpoint_dir,
-        )
+        res = louvain(e, max_rounds=args.max_rounds, levels=args.levels)
         res.labels.write.mode("overwrite").parquet(args.out)
         print(
             f"louvain: rounds={res.rounds} levels={res.levels} "

@@ -98,13 +98,12 @@ def anf(
     dst: str = "dst_conv_id",
     n_regs: int = 8,
     max_iter: int = 30,
-    checkpoint_dir: str | None = None,
     keep_states: bool = False,
 ) -> ANFResult:
     """Forward-reachability sketches: after convergence vertex v's
     bitmaps sketch ``{u : v reaches u via directed edges}`` (v incl.)."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     reg_cols = [f"r{i}" for i in range(n_regs)]
 
     verts = (

@@ -1,8 +1,9 @@
 """BFS hop distances / k-hop neighborhoods over the directed edge table.
 
 Frontier-expansion supersteps (the same join/agg shape as the other L3
-operators, checkpointable): each round joins the frontier to the
-adjacency, keeps newly discovered vertices, records their distance.
+operators, materialized once per superstep via CheckpointManager): each
+round joins the frontier to the adjacency, keeps newly discovered
+vertices, records their distance.
 Terminates when the frontier empties — at most diameter rounds.
 
 Scale shape: the frontier is usually tiny relative to the edge table, so
@@ -22,12 +23,11 @@ def bfs_distances(
     edges: DataFrame,
     sources: list[str],
     max_hops: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """→ (conv_id, distance) for every vertex reachable from ``sources``
     within ``max_hops`` directed hops (distance 0 = the sources)."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     adj = (
         edges.select(
             F.col("src_conv_id").alias("u"), F.col("dst_conv_id").alias("v")
@@ -76,7 +76,6 @@ def landmark_distances(
     edges: DataFrame,
     n_landmarks: int = 8,
     max_hops: int = 10,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS from ``n_landmarks`` deterministic landmarks
     over the UNDIRECTED graph → ``(landmark, conv_id, distance)`` —
@@ -91,7 +90,7 @@ def landmark_distances(
     from unarxive_spark.operators.components import undirected
 
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     adj = undirected(edges).select("u", "v").distinct().repartition("u").cache()
     verts = adj.select(F.col("u").alias("conv_id")).distinct()
     landmarks = (

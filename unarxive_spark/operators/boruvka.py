@@ -54,7 +54,6 @@ def boruvka_forest(
     fixed_rounds: int | None = None,
     max_iter: int = 30,
     max_jump: int = 16,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Minimum spanning forest → ``(conv_a, conv_b, w, round)``.
 
@@ -70,7 +69,7 @@ def boruvka_forest(
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     pair = (
         edges.filter(F.col("src_conv_id") != F.col("dst_conv_id"))

@@ -63,7 +63,6 @@ def _reach_fixpoint(
 def bowtie_census(
     edges: DataFrame,
     max_iter: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Four-region bow-tie census → ``(region string, n_vertices
     long)`` with regions ``scc`` (giant strongly connected component,
@@ -74,7 +73,7 @@ def bowtie_census(
     from unarxive_spark.operators.scc import strongly_connected_components
 
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     de = (
         edges.select(

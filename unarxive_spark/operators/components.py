@@ -72,68 +72,72 @@ def connected_components(
     # partitioned like the label state; the first superstep fills the cache
     adj = undirected(edges).repartition(n_parts, "u").cache()
 
-    resumed = ckpt.last_committed()
-    if resumed is not None:
-        labels = ckpt.restore(resumed).select("conv_id", "component")
-        start = resumed + 1
-    else:
-        labels = vertices.select(
-            "conv_id", F.col("conv_id").alias("component")
-        )
-        start = 0
-    labels = labels.repartition(n_parts, "conv_id")
+    try:
+        resumed = ckpt.last_committed()
+        if resumed is not None:
+            labels = ckpt.restore(resumed).select("conv_id", "component")
+            start = resumed + 1
+        else:
+            labels = vertices.select(
+                "conv_id", F.col("conv_id").alias("component")
+            )
+            start = 0
+        labels = labels.repartition(n_parts, "conv_id")
 
-    converged = False
-    it = start
-    for it in range(start, max_iter):
-        # neighbour-min: push each vertex's label to its neighbours and
-        # take the min per receiver (the gather, the one exchange); the
-        # state side of both joins is co-partitioned with adj and with
-        # the gather output, and the old label rides along so the
-        # convergence count is a column diff on the materialized state
-        # instead of a second label-table join per superstep (guide §2.4)
-        nbr_min = (
-            adj.join(
-                labels.withColumnRenamed("conv_id", "u").hint("shuffle_hash"),
-                "u",
-            )
-            .groupBy(F.col("v").alias("conv_id"))
-            .agg(F.min("component").alias("_nbr"))
-        )
-        new_labels = labels.join(
-            nbr_min.hint("shuffle_hash"), "conv_id", "left"
-        ).select(
-            "conv_id",
-            # least() skips the NULL of a vertex without neighbours
-            F.least("component", "_nbr").alias("component"),
-            F.col("component").alias("_old"),
-        )
-        if shortcut:
-            # label(v) ← label(label(v)): labels are vertex ids, so the
-            # jump is an equi-join of the label table with itself; the
-            # invariant label(x) ≤ x makes the jumped label the minimum
-            new_labels = (
-                new_labels.join(
-                    new_labels.select(
-                        F.col("conv_id").alias("component"),
-                        F.col("component").alias("_jump"),
+        converged = False
+        it = start
+        for it in range(start, max_iter):
+            # neighbour-min: push each vertex's label to its neighbours and
+            # take the min per receiver (the gather, the one exchange); the
+            # state side of both joins is co-partitioned with adj and with
+            # the gather output, and the old label rides along so the
+            # convergence count is a column diff on the materialized state
+            # instead of a second label-table join per superstep (guide §2.4)
+            nbr_min = (
+                adj.join(
+                    labels.withColumnRenamed("conv_id", "u").hint(
+                        "shuffle_hash"
                     ),
-                    "component",
+                    "u",
                 )
-                .select(
-                    "conv_id", F.col("_jump").alias("component"), "_old"
-                )
+                .groupBy(F.col("v").alias("conv_id"))
+                .agg(F.min("component").alias("_nbr"))
             )
-        # one pass: materialize with the change count observed in it
-        new_m, n_changed = ckpt.superstep(
-            it,
-            new_labels,
-            "n_changed",
-            F.count_if(F.col("component") != F.col("_old")),
-        )
-        labels = new_m.select("conv_id", "component")
-        if n_changed == 0:
-            converged = True
-            break
-    adj.unpersist()
+            new_labels = labels.join(
+                nbr_min.hint("shuffle_hash"), "conv_id", "left"
+            ).select(
+                "conv_id",
+                # least() skips the NULL of a vertex without neighbours
+                F.least("component", "_nbr").alias("component"),
+                F.col("component").alias("_old"),
+            )
+            if shortcut:
+                # label(v) ← label(label(v)): labels are vertex ids, so the
+                # jump is an equi-join of the label table with itself; the
+                # invariant label(x) ≤ x makes the jumped label the minimum
+                new_labels = (
+                    new_labels.join(
+                        new_labels.select(
+                            F.col("conv_id").alias("component"),
+                            F.col("component").alias("_jump"),
+                        ),
+                        "component",
+                    )
+                    .select(
+                        "conv_id", F.col("_jump").alias("component"), "_old"
+                    )
+                )
+            # one pass: materialize with the change count observed in it
+            new_m, n_changed = ckpt.superstep(
+                it,
+                new_labels,
+                "n_changed",
+                F.count_if(F.col("component") != F.col("_old")),
+            )
+            labels = new_m.select("conv_id", "component")
+            if n_changed == 0:
+                converged = True
+                break
+    finally:
+        adj.unpersist()
     return ComponentsResult(labels, it + 1, converged)

@@ -37,12 +37,14 @@ class HITSResult:
     superstep_secs: list[float] = field(default_factory=list)
 
 
+# reduce-side groups per hub in each salted gather
+N_SALTS = 16
+
+
 def hits(
     edges: DataFrame,
     n_iter: int = 10,
     weighted: bool = True,
-    n_salts: int = 16,
-    checkpoint_dir: str | None = None,
 ) -> HITSResult:
     """Fixed-iteration HITS over the directed weighted edge table.
 
@@ -53,7 +55,7 @@ def hits(
     under round(6).
     """
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     w = F.col("weight") if weighted else F.lit(1.0)
     e = (
         edges.select(
@@ -71,8 +73,8 @@ def hits(
             "src",
             "dst",
             "w",
-            F.pmod(h64(F.col("src")), F.lit(n_salts)).alias("_salt_s"),
-            F.pmod(h64(F.col("dst")), F.lit(n_salts)).alias("_salt_d"),
+            F.pmod(h64(F.col("src")), F.lit(N_SALTS)).alias("_salt_s"),
+            F.pmod(h64(F.col("dst")), F.lit(N_SALTS)).alias("_salt_d"),
         )
         .repartition("src")
         .cache()
@@ -108,7 +110,7 @@ def hits(
         )
         auth_raw = salted_sum(
             contrib_a, key="dst", value=F.sum("c"), out="a",
-            salt_from="src", n_salts=n_salts, salt_col="_salt_s",
+            salt_from="src", n_salts=N_SALTS, salt_col="_salt_s",
         )
         a_sum = auth_raw.agg(
             F.coalesce(F.sum("a"), F.lit(0.0)).alias("_s")
@@ -141,7 +143,7 @@ def hits(
         )
         hub_raw = salted_sum(
             contrib_h, key="src", value=F.sum("c"), out="h",
-            salt_from="dst", n_salts=n_salts, salt_col="_salt_d",
+            salt_from="dst", n_salts=N_SALTS, salt_col="_salt_d",
         )
         h_sum = hub_raw.agg(
             F.coalesce(F.sum("h"), F.lit(0.0)).alias("_s")

@@ -81,52 +81,54 @@ def ic_influence_spread(
         .repartition("sim_id", "src_conv_id")
         .cache()
     )
-    live.count()
+    try:
+        live.count()
 
-    verts = (
-        de.select(F.col("src_conv_id").alias("conv_id"))
-        .unionByName(de.select(F.col("dst_conv_id").alias("conv_id")))
-        .distinct()
-    )
-    seeds = verts.orderBy(
-        h64(F.col("conv_id"), salt="icseed|"), F.col("conv_id")
-    ).limit(n_seeds)
-    resumed = ckpt.last_committed() if hops > 0 else None
-    if resumed is not None:
-        # iteration h holds hops <= h + 1: a longer earlier run resumes
-        # from this run's last hop
-        reached = ckpt.restore(min(resumed, hops - 1))
-        start = resumed + 1
-    else:
-        reached = seeds.crossJoin(F.broadcast(sims)).select(
-            "sim_id", "conv_id", F.lit(0).alias("_hop")
-        )
-        start = 0
-
-    for hop in range(start, hops):
-        frontier = reached.filter(F.col("_hop") == hop)
-        new = (
-            live.join(
-                frontier.withColumnRenamed("conv_id", "src_conv_id"),
-                ["sim_id", "src_conv_id"],
-            )
-            .select("sim_id", F.col("dst_conv_id").alias("conv_id"))
+        verts = (
+            de.select(F.col("src_conv_id").alias("conv_id"))
+            .unionByName(de.select(F.col("dst_conv_id").alias("conv_id")))
             .distinct()
-            .join(reached, ["sim_id", "conv_id"], "left_anti")
-            .select("sim_id", "conv_id", F.lit(hop + 1).alias("_hop"))
         )
-        reached, _ = ckpt.superstep(
-            hop, reached.unionByName(new), "n_reached", F.count(F.lit(1))
-        )
+        seeds = verts.orderBy(
+            h64(F.col("conv_id"), salt="icseed|"), F.col("conv_id")
+        ).limit(n_seeds)
+        resumed = ckpt.last_committed() if hops > 0 else None
+        if resumed is not None:
+            # iteration h holds hops <= h + 1: a longer earlier run resumes
+            # from this run's last hop
+            reached = ckpt.restore(min(resumed, hops - 1))
+            start = resumed + 1
+        else:
+            reached = seeds.crossJoin(F.broadcast(sims)).select(
+                "sim_id", "conv_id", F.lit(0).alias("_hop")
+            )
+            start = 0
 
-    # the per-sim edge counts are sim-sized; evaluate them once so the
-    # cached live-edge table can be released before the caller collects
-    n_live = (
-        live.groupBy("sim_id")
-        .agg(F.count(F.lit(1)).alias("n_live_edges"))
-        .localCheckpoint(eager=True)
-    )
-    live.unpersist()
+        for hop in range(start, hops):
+            frontier = reached.filter(F.col("_hop") == hop)
+            new = (
+                live.join(
+                    frontier.withColumnRenamed("conv_id", "src_conv_id"),
+                    ["sim_id", "src_conv_id"],
+                )
+                .select("sim_id", F.col("dst_conv_id").alias("conv_id"))
+                .distinct()
+                .join(reached, ["sim_id", "conv_id"], "left_anti")
+                .select("sim_id", "conv_id", F.lit(hop + 1).alias("_hop"))
+            )
+            reached, _ = ckpt.superstep(
+                hop, reached.unionByName(new), "n_reached", F.count(F.lit(1))
+            )
+
+        # the per-sim edge counts are sim-sized; evaluate them once so the
+        # cached live-edge table can be released before the caller collects
+        n_live = (
+            live.groupBy("sim_id")
+            .agg(F.count(F.lit(1)).alias("n_live_edges"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        live.unpersist()
     n_reach = reached.groupBy("sim_id").agg(
         F.count(F.lit(1)).alias("n_reached")
     )

@@ -69,53 +69,55 @@ def katz_centrality(
     spark = edges.sparkSession
     ckpt = CheckpointManager(spark, checkpoint_dir)
     adj = _integer_weight_edges(edges).repartition("src").cache()
-    resumed = ckpt.last_committed()
-    if resumed is not None:
-        # round r's state does not depend on the horizon: a longer
-        # earlier run resumes from this run's last round
-        state = ckpt.restore(min(resumed, rounds))
-        start = resumed + 1
-    else:
-        verts = (
-            adj.select(F.col("src").alias("conv_id"))
-            .unionByName(adj.select(F.col("dst").alias("conv_id")))
-            .distinct()
-        )
-        state, _ = ckpt.superstep(
-            0,
-            verts.select(
-                "conv_id",
-                F.lit(1).cast("long").alias("w"),
-                F.lit(1).cast("long").alias("z"),
-            ),
-            "max_walks",
-            F.max("w"),
-        )
-        start = 1
-    for rnd in range(start, rounds + 1):
-        gathered = (
-            adj.join(
-                state.select(
-                    F.col("conv_id").alias("src"), F.col("w").alias("_wu")
+    try:
+        resumed = ckpt.last_committed()
+        if resumed is not None:
+            # round r's state does not depend on the horizon: a longer
+            # earlier run resumes from this run's last round
+            state = ckpt.restore(min(resumed, rounds))
+            start = resumed + 1
+        else:
+            verts = (
+                adj.select(F.col("src").alias("conv_id"))
+                .unionByName(adj.select(F.col("dst").alias("conv_id")))
+                .distinct()
+            )
+            state, _ = ckpt.superstep(
+                0,
+                verts.select(
+                    "conv_id",
+                    F.lit(1).cast("long").alias("w"),
+                    F.lit(1).cast("long").alias("z"),
                 ),
-                "src",
+                "max_walks",
+                F.max("w"),
             )
-            .groupBy(F.col("dst").alias("conv_id"))
-            .agg(F.sum(F.col("_wu") * F.col("_w")).alias("_g"))
-        )
-        state = (
-            state.join(gathered, "conv_id", "left")
-            .select(
-                "conv_id",
-                F.coalesce(F.col("_g"), F.lit(0)).alias("w"),
-                (
-                    F.lit(2) * F.col("z")
-                    + F.coalesce(F.col("_g"), F.lit(0))
-                ).alias("z"),
+            start = 1
+        for rnd in range(start, rounds + 1):
+            gathered = (
+                adj.join(
+                    state.select(
+                        F.col("conv_id").alias("src"), F.col("w").alias("_wu")
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("conv_id"))
+                .agg(F.sum(F.col("_wu") * F.col("_w")).alias("_g"))
             )
-        )
-        state, _ = ckpt.superstep(rnd, state, "max_walks", F.max("w"))
-    adj.unpersist()
+            state = (
+                state.join(gathered, "conv_id", "left")
+                .select(
+                    "conv_id",
+                    F.coalesce(F.col("_g"), F.lit(0)).alias("w"),
+                    (
+                        F.lit(2) * F.col("z")
+                        + F.coalesce(F.col("_g"), F.lit(0))
+                    ).alias("z"),
+                )
+            )
+            state, _ = ckpt.superstep(rnd, state, "max_walks", F.max("w"))
+    finally:
+        adj.unpersist()
     # z = 2*z_prev + w with z_prev >= w_prev >= 0 implies z >= w >= 0;
     # a violation is only reachable through int64 wrap-around.
     guard = F.assert_true(

@@ -96,14 +96,13 @@ def k_truss(
     edges: DataFrame,
     k: int,
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Surviving undirected edges ``(a, b)`` (a < b) of the k-truss of
     the directed input edge table."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3: {k}")
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     live = canonical_edges(edges, by_degree=False)
     n_live = live.count()

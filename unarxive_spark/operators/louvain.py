@@ -262,7 +262,6 @@ def louvain(
     max_rounds: int = 20,
     levels: int = 1,
     weight_col: str = "weight",
-    checkpoint_dir: str | None = None,
 ) -> LouvainResult:
     """Louvain community detection → labels (conv_id, comm).
 
@@ -270,7 +269,7 @@ def louvain(
     repeats local moves on the contracted super-vertex graph and maps
     the final communities back to original vertices."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     und = _und_long(edges, weight_col)
     # derive the vertex-id type from the input so non-string ids don't
     # trip the later unionByName with an opaque type error (ADVICE r4)
@@ -283,7 +282,7 @@ def louvain(
     converged = True
     labels = None
     for level in range(levels):
-        # parity/checkpoint offset is level*max_rounds, NOT the actual
+        # parity/superstep offset is level*max_rounds, NOT the actual
         # rounds run so far: the parity schedule must be a pure function
         # of (level, round) so a fixed SQL unroll (q87's two-level
         # oracle) replays it without knowing when level 1 converged

@@ -72,61 +72,67 @@ def label_propagation(
     # partitioned like the label state; the first superstep fills the cache
     adj = _undirected_weighted(edges).repartition(n_parts, "u").cache()
 
-    resumed = ckpt.last_committed()
-    if resumed is not None:
-        labels = ckpt.restore(resumed).select("conv_id", "label")
-        start = resumed + 1
-    else:
-        labels = vertices.select("conv_id", F.col("conv_id").alias("label"))
-        start = 0
-    labels = labels.repartition(n_parts, "conv_id")
+    try:
+        resumed = ckpt.last_committed()
+        if resumed is not None:
+            labels = ckpt.restore(resumed).select("conv_id", "label")
+            start = resumed + 1
+        else:
+            labels = vertices.select(
+                "conv_id", F.col("conv_id").alias("label")
+            )
+            start = 0
+        labels = labels.repartition(n_parts, "conv_id")
 
-    it = start
-    for it in range(start, n_iter):
-        # gather neighbour labels: v receives u's label with weight w.
-        # The state side of the join is co-partitioned with adj; the
-        # received rows are exchanged ONCE, by receiver, so both
-        # aggregates and the join back onto the state need no other
-        # exchange
-        received = (
-            adj.join(
-                labels.withColumnRenamed("conv_id", "u").hint("shuffle_hash"),
-                "u",
+        it = start
+        for it in range(start, n_iter):
+            # gather neighbour labels: v receives u's label with weight w.
+            # The state side of the join is co-partitioned with adj; the
+            # received rows are exchanged ONCE, by receiver, so both
+            # aggregates and the join back onto the state need no other
+            # exchange
+            received = (
+                adj.join(
+                    labels.withColumnRenamed("conv_id", "u").hint(
+                        "shuffle_hash"
+                    ),
+                    "u",
+                )
+                .select(F.col("v").alias("conv_id"), "label", "w")
+                .repartition(n_parts, "conv_id")
             )
-            .select(F.col("v").alias("conv_id"), "label", "w")
-            .repartition(n_parts, "conv_id")
-        )
-        tallies = received.groupBy("conv_id", "label").agg(
-            F.sum("w").alias("tw")
-        )
-        # argmax weight, tie-break min label: min over the struct
-        # (negative weight, label) in a single deterministic pass
-        winner = tallies.groupBy("conv_id").agg(
-            F.min(F.struct((-F.col("tw")).alias("nw"), F.col("label"))).alias(
-                "m"
+            tallies = received.groupBy("conv_id", "label").agg(
+                F.sum("w").alias("tw")
             )
-        ).select("conv_id", F.col("m.label").alias("_win"))
-        # the state rows ARE the vertex set (invariant from init), so
-        # the winner left-joins onto the state directly — no vertices
-        # re-join — and the carried old label makes the change count a
-        # column diff on the materialized state instead of a second
-        # label-table join per superstep (guide §2.4; the same fusion
-        # as connected_components)
-        new_labels = labels.join(
-            winner.hint("shuffle_hash"), "conv_id", "left"
-        ).select(
-            "conv_id",
-            F.coalesce(F.col("_win"), F.col("label")).alias("label"),
-            F.col("label").alias("_old"),
-        )
-        new_m, _ = ckpt.superstep(
-            it,
-            new_labels,
-            "n_changed",
-            F.count_if(F.col("label") != F.col("_old")),
-        )
-        labels = new_m.select("conv_id", "label")
-    adj.unpersist()
+            # argmax weight, tie-break min label: min over the struct
+            # (negative weight, label) in a single deterministic pass
+            winner = tallies.groupBy("conv_id").agg(
+                F.min(
+                    F.struct((-F.col("tw")).alias("nw"), F.col("label"))
+                ).alias("m")
+            ).select("conv_id", F.col("m.label").alias("_win"))
+            # the state rows ARE the vertex set (invariant from init), so
+            # the winner left-joins onto the state directly — no vertices
+            # re-join — and the carried old label makes the change count a
+            # column diff on the materialized state instead of a second
+            # label-table join per superstep (guide §2.4; the same fusion
+            # as connected_components)
+            new_labels = labels.join(
+                winner.hint("shuffle_hash"), "conv_id", "left"
+            ).select(
+                "conv_id",
+                F.coalesce(F.col("_win"), F.col("label")).alias("label"),
+                F.col("label").alias("_old"),
+            )
+            new_m, _ = ckpt.superstep(
+                it,
+                new_labels,
+                "n_changed",
+                F.count_if(F.col("label") != F.col("_old")),
+            )
+            labels = new_m.select("conv_id", "label")
+    finally:
+        adj.unpersist()
     return LPAResult(labels, it + 1 if n_iter > start else 0)
 
 
@@ -134,7 +140,6 @@ def seeded_label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
     n_iter: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> LPAResult:
     """Semi-supervised LPA: ``seeds`` (conv_id, label) are ANCHORS whose
     labels never change; every other vertex starts unlabeled and adopts
@@ -152,7 +157,7 @@ def seeded_label_propagation(
     sized left join, and convergence is label-change count == 0.
     """
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     vertices = (
         edges.select(F.col("src_conv_id").alias("conv_id"))
@@ -160,61 +165,63 @@ def seeded_label_propagation(
         .distinct()
     )
     adj = _undirected_weighted(edges).repartition("u").cache()
-    adj.count()
     anchors = seeds.select(
         "conv_id", F.col("label").alias("_seed")
     ).cache()
+    try:
+        adj.count()
 
-    labels = vertices.join(anchors, "conv_id", "left").select(
-        "conv_id", F.col("_seed").alias("label")
-    )
+        labels = vertices.join(anchors, "conv_id", "left").select(
+            "conv_id", F.col("_seed").alias("label")
+        )
 
-    it = 0
-    for it in range(n_iter):
-        received = adj.join(
-            labels.filter(F.col("label").isNotNull()).withColumnRenamed(
-                "conv_id", "u"
-            ),
-            "u",
-        ).select(F.col("v").alias("conv_id"), "label", "w")
-        tallies = received.groupBy("conv_id", "label").agg(
-            F.sum("w").alias("tw")
-        )
-        winner = (
-            tallies.groupBy("conv_id")
-            .agg(
-                F.min(
-                    F.struct((-F.col("tw")).alias("nw"), F.col("label"))
-                ).alias("m")
+        it = 0
+        for it in range(n_iter):
+            received = adj.join(
+                labels.filter(F.col("label").isNotNull()).withColumnRenamed(
+                    "conv_id", "u"
+                ),
+                "u",
+            ).select(F.col("v").alias("conv_id"), "label", "w")
+            tallies = received.groupBy("conv_id", "label").agg(
+                F.sum("w").alias("tw")
             )
-            .select("conv_id", F.col("m.label").alias("_win"))
-        )
-        # state rows ARE the vertex set (init builds them from
-        # vertices), so winner + anchors left-join onto the state
-        # directly — no vertices re-join — and the carried old label
-        # fuses the change count into a column diff on the
-        # materialized state (guide §2.4)
-        new_labels = (
-            labels.select(
-                "conv_id", F.col("label").alias("_old")
+            winner = (
+                tallies.groupBy("conv_id")
+                .agg(
+                    F.min(
+                        F.struct((-F.col("tw")).alias("nw"), F.col("label"))
+                    ).alias("m")
+                )
+                .select("conv_id", F.col("m.label").alias("_win"))
             )
-            .join(winner, "conv_id", "left")
-            .join(anchors, "conv_id", "left")
-            .select(
-                "conv_id",
-                F.coalesce(F.col("_seed"), F.col("_win")).alias("label"),
-                "_old",
+            # state rows ARE the vertex set (init builds them from
+            # vertices), so winner + anchors left-join onto the state
+            # directly — no vertices re-join — and the carried old label
+            # fuses the change count into a column diff on the
+            # materialized state (guide §2.4)
+            new_labels = (
+                labels.select(
+                    "conv_id", F.col("label").alias("_old")
+                )
+                .join(winner, "conv_id", "left")
+                .join(anchors, "conv_id", "left")
+                .select(
+                    "conv_id",
+                    F.coalesce(F.col("_seed"), F.col("_win")).alias("label"),
+                    "_old",
+                )
             )
-        )
-        new_m, n_changed = ckpt.superstep(
-            it,
-            new_labels,
-            "n_changed",
-            F.count_if(~F.col("label").eqNullSafe(F.col("_old"))),
-        )
-        labels = new_m.select("conv_id", "label")
-        if n_changed == 0:
-            break
-    anchors.unpersist()
-    adj.unpersist()
+            new_m, n_changed = ckpt.superstep(
+                it,
+                new_labels,
+                "n_changed",
+                F.count_if(~F.col("label").eqNullSafe(F.col("_old"))),
+            )
+            labels = new_m.select("conv_id", "label")
+            if n_changed == 0:
+                break
+    finally:
+        anchors.unpersist()
+        adj.unpersist()
     return LPAResult(labels=labels, iterations=it + 1)

@@ -21,7 +21,7 @@ and itself proposes one of them — that pair always shakes hands, so
 every round matches at least one edge and convergence implies
 maximality.
 
-Spark shape per round: the LIVE ADJACENCY itself is the checkpointed
+Spark shape per round: the LIVE ADJACENCY itself is the materialized
 state — two anti-joins against the (tiny) matched-endpoint set shrink
 it in place, ONE min-aggregate for the proposals, ONE self-join for
 the handshake.  The r5 shape instead kept the live VERTEX set as
@@ -50,7 +50,6 @@ def maximal_matching(
     edges: DataFrame,
     max_iter: int = 50,
     fixed_rounds: int | None = None,
-    checkpoint_dir: str | None = None,
     salt: str = "mm|",
 ) -> DataFrame:
     """Deterministic greedy maximal matching of the undirected graph.
@@ -68,7 +67,7 @@ def maximal_matching(
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     adj = undirected(edges).repartition("u").cache()
     adj.count()

@@ -38,14 +38,13 @@ __all__ = ["maximal_independent_set", "greedy_coloring"]
 def maximal_independent_set(
     edges: DataFrame,
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
     salt: str = "mis|",
 ) -> DataFrame:
     """Deterministic MIS of the undirected graph → one column
     ``conv_id`` (independent: no edge inside; maximal: every vertex
     outside has a neighbor inside)."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
 
     adj = undirected(edges).repartition("u").cache()
     adj.count()
@@ -111,7 +110,6 @@ def greedy_coloring(
     edges: DataFrame,
     max_colors: int = 64,
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Distance-1 vertex coloring by layered MIS (the standard
     distributed reduction: color c = MIS of the still-uncolored induced
@@ -149,9 +147,6 @@ def greedy_coloring(
                     F.col("v").alias("dst_conv_id"),
                 ),
                 max_iter=max_iter,
-                checkpoint_dir=(
-                    f"{checkpoint_dir}/c{color}" if checkpoint_dir else None
-                ),
                 salt=f"mis{color}|",
             ).unionByName(isolated).distinct()
         parts.append(

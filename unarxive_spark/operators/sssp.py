@@ -6,7 +6,8 @@ practice — stop when no distance improves). Weights must be positive
 (edge weights here are marker counts ≥ 1; for "stronger link = closer"
 semantics pass a transformed weight column, e.g. 1/weight).
 
-Same join/agg superstep shape as PageRank; checkpointable.
+Same join/agg superstep shape as PageRank; state materialized once per
+superstep via CheckpointManager.
 Oracle: dict-based Dijkstra in tests.
 """
 
@@ -22,7 +23,6 @@ def shortest_paths(
     edges: DataFrame,
     source: str,
     max_rounds: int = 50,
-    checkpoint_dir: str | None = None,
     strict: bool = True,
 ) -> DataFrame:
     """→ (conv_id, distance double) for vertices reachable from source.
@@ -32,7 +32,7 @@ def shortest_paths(
     silent upper bound instead of shortest paths. Pass ``strict=False``
     to accept the bounded relaxation (e.g. hop-limited distances)."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     adj = (
         edges.select(
             F.col("src_conv_id").alias("u"),

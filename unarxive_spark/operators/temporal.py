@@ -68,20 +68,19 @@ def temporal_reachability(
     tedges: DataFrame,
     source: str,
     max_rounds: int = 20,
-    checkpoint_dir: str | None = None,
     strict: bool = True,
 ) -> DataFrame:
     """→ ``(conv_id, reach_us long)``: earliest arrival time (integer
     microseconds) for every vertex reachable from ``source`` along a
     time-respecting path; the source itself carries ``reach_us = 0``.
 
-    One join + one min-aggregate per superstep over checkpointed state
+    One join + one min-aggregate per superstep over materialized state
     (state is ≤|V| rows — vertex-sized, never edge-sized); the edge
     table is repartitioned on the join key once and reused every round.
     ``strict=True`` raises if labels still improve at ``max_rounds``
     (a silent hop-bounded result is not reachability)."""
     spark = tedges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
+    ckpt = CheckpointManager(spark, None)
     adj = (
         tedges.select("src", "dst", "et")
         .filter(F.col("src") != F.col("dst"))

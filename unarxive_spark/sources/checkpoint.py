@@ -42,9 +42,20 @@ iteration. "Fresh run" is decided on the driver (no ``_lineage``
 directory, or no commit in it yet); anything in it that is neither hidden
 nor a readable commit raises.
 
-On a real deployment the parquet directories become Iceberg tables
-(``writeTo(...).createOrReplace``/snapshots); the protocol is identical —
-we gate on parquet here because the sandbox ships no Iceberg catalog jar.
+On a real deployment the parquet directories become Iceberg tables;
+the protocol is identical. The engine runs on parquet because no Iceberg
+runtime jar is on the classpath. The mapping (see also sources/tables.py):
+
+- transcripts / edges / ranks parquet dirs → Iceberg tables
+  (transcripts partitioned by ``days(ts), bucket(64, conv_id)``, edges
+  by ``bucket(64, src_conv_id)``)
+- ``write.mode("overwrite").parquet(p)`` → ``writeTo(t).createOrReplace()``
+- checkpoint ``iter=N`` dirs → per-iteration snapshots (resume = read
+  the snapshot of the last committed iteration from the lineage table)
+- bucketed parquet (tables.py) → ``bucket(N, src_conv_id)`` partition
+  transform
+- incremental streaming landing zone → Iceberg append + periodic
+  ``rewrite_data_files`` compaction
 """
 
 from __future__ import annotations

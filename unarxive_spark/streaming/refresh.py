@@ -22,7 +22,6 @@ count changes.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from unarxive_spark.operators.pagerank import PageRankResult, pagerank
@@ -33,12 +32,16 @@ from unarxive_spark.streaming.incremental import (
 
 
 def _last_snapshot(spark: SparkSession, ranks_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(ranks_dir)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None  # first refresh: cold start
-        raise
+    """The published ranks, or None before the first publish (cold
+    start). "Not published yet" is decided on the driver, as
+    CheckpointManager does: reading a missing path would make Spark log
+    the failure. A directory that exists but holds no readable parquet
+    raises, never reads as a cold start."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(ranks_dir)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    if not path.getFileSystem(conf).exists(path):
+        return None
+    return spark.read.parquet(ranks_dir)
 
 
 def pagerank_refresh(
