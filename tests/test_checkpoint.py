@@ -5,6 +5,7 @@ import importlib
 import inspect
 import os
 import pkgutil
+import re
 import shutil
 import tempfile
 
@@ -13,14 +14,28 @@ from pyspark.sql import functions as F
 
 import unarxive_spark.operators as operators
 from unarxive_spark import cli
+from unarxive_spark.operators.anf import anf
+from unarxive_spark.operators.bfs import bfs_distances, landmark_distances
+from unarxive_spark.operators.boruvka import boruvka_forest
+from unarxive_spark.operators.bowtie import bowtie_census
 from unarxive_spark.operators.components import connected_components
+from unarxive_spark.operators.hits import hits
 from unarxive_spark.operators.influence import ic_influence_spread
 from unarxive_spark.operators.katz import katz_centrality
+from unarxive_spark.operators.ktruss import k_truss
+from unarxive_spark.operators.louvain import louvain
 from unarxive_spark.operators.lpa import (
     label_propagation,
     seeded_label_propagation,
 )
+from unarxive_spark.operators.matching import maximal_matching
+from unarxive_spark.operators.mis import (
+    greedy_coloring,
+    maximal_independent_set,
+)
 from unarxive_spark.operators.pagerank import pagerank
+from unarxive_spark.operators.sssp import shortest_paths
+from unarxive_spark.operators.temporal import temporal_reachability
 from unarxive_spark.sources.checkpoint import LINEAGE_SCHEMA, CheckpointManager
 
 
@@ -469,3 +484,155 @@ def test_failed_superstep_releases_loop_caches(
         # the session fixtures stay cached for the tests after this one
         transcripts_small.cache()
         edges_small.cache()
+
+
+def _mixed_graph(spark):
+    """A 3-cycle feeding a chain, a triangle and a lone edge, integer
+    weights: every loop module runs on it in a few supersteps."""
+    rows = [
+        ("v0", "v1", 1.0), ("v1", "v2", 2.0), ("v2", "v0", 1.0),
+        ("v2", "v3", 1.0), ("v3", "v4", 3.0),
+        ("v5", "v6", 1.0), ("v6", "v7", 1.0), ("v7", "v5", 2.0),
+        ("v8", "v9", 1.0),
+    ]
+    return spark.createDataFrame(
+        rows, "src_conv_id string, dst_conv_id string, weight double"
+    )
+
+
+def _temporal(edges):
+    return temporal_reachability(
+        edges.select(
+            F.col("src_conv_id").alias("src"),
+            F.col("dst_conv_id").alias("dst"),
+            F.col("weight").cast("long").alias("et"),
+        ),
+        "v0",
+        strict=False,
+    )
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        lambda e: pagerank(e, tol=-1.0, max_iter=3),
+        lambda e: connected_components(e),
+        lambda e: label_propagation(e, n_iter=3),
+        _seeded_lpa,
+        lambda e: katz_centrality(e, rounds=3),
+        lambda e: ic_influence_spread(e, hops=2, n_sims=2, n_seeds=1),
+        lambda e: hits(e, n_iter=3),
+        lambda e: hits(e.limit(0)),
+        lambda e: anf(e),
+        lambda e: bfs_distances(e, ["v0"]),
+        lambda e: landmark_distances(e, n_landmarks=2),
+        lambda e: shortest_paths(e, "v0", strict=False),
+        _temporal,
+        lambda e: maximal_matching(e),
+        lambda e: boruvka_forest(e),
+        lambda e: maximal_independent_set(e),
+        lambda e: greedy_coloring(e),
+        lambda e: k_truss(e, k=3),
+        lambda e: louvain(e, max_rounds=4, levels=2),
+        lambda e: bowtie_census(e),
+    ],
+    ids=[
+        "pagerank", "components", "lpa", "seeded_lpa", "katz", "influence",
+        "hits", "hits_empty", "anf", "bfs", "landmarks", "sssp", "temporal",
+        "matching", "boruvka", "mis", "greedy_coloring", "ktruss", "louvain",
+        "bowtie",
+    ],
+)
+def test_finished_loop_releases_loop_caches(
+    spark, transcripts_small, edges_small, loop
+):
+    """A loop that returns leaves no loop-invariant frame cached either."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    try:
+        assert cache.isEmpty()
+        loop(_mixed_graph(spark))
+        assert cache.isEmpty()
+    finally:
+        transcripts_small.cache()
+        edges_small.cache()
+
+
+def _values(frame, col):
+    return {r["conv_id"]: r[col] for r in frame.collect()}
+
+
+@pytest.mark.parametrize(
+    "run, frame, col",
+    [
+        (
+            lambda e, k, d: pagerank(
+                e, tol=-1.0, max_iter=k, checkpoint_dir=d
+            ),
+            lambda r: r.ranks,
+            "rank",
+        ),
+        (
+            lambda e, k, d: connected_components(
+                e, max_iter=k, checkpoint_dir=d
+            ),
+            lambda r: r.components,
+            "component",
+        ),
+        (
+            lambda e, k, d: label_propagation(e, n_iter=k, checkpoint_dir=d),
+            lambda r: r.labels,
+            "label",
+        ),
+    ],
+    ids=["pagerank", "components", "lpa"],
+)
+def test_rerun_answers_for_its_own_horizon(spark, run, frame, col):
+    """A rerun on a directory that already holds 4 committed supersteps
+    counts the restored ones, and returns what a fresh run with its own
+    horizon returns, also when that horizon is shorter."""
+    edges = _path_graph(spark, 12)
+
+    def same(a, b):
+        assert set(a) == set(b)
+        if col == "rank":
+            assert max(abs(a[v] - b[v]) for v in a) < 1e-12
+        else:
+            assert a == b
+
+    d = tempfile.mkdtemp(prefix="horizon_ckpt_")
+    try:
+        first = run(edges, 4, d)
+        assert first.iterations == 4
+        want = _values(frame(first), col)
+        again = run(edges, 4, d)
+        assert again.iterations == 4
+        same(_values(frame(again), col), want)
+        shorter = run(edges, 2, d)
+        fresh = run(edges, 2, None)
+        assert shorter.iterations == fresh.iterations == 2
+        same(_values(frame(shorter), col), _values(frame(fresh), col))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# The superstep driver owns cache lifetime, resume and superstep timing:
+# a module with a superstep loop caches through ``ckpt.cache``, resumes
+# through ``ckpt.resume`` and reads ``ckpt.superstep_secs``; it writes no
+# unpersist, restore or clock of its own.
+_DRIVER_OWNED = (".unpersist(", ".last_committed(", ".restore(", "time.monotonic")
+
+
+def test_loop_modules_leave_caches_resume_and_timing_to_the_driver():
+    loops = {}
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        src = inspect.getsource(mod)
+        if ".superstep(" in src:
+            loops[info.name] = src
+    assert len(loops) == 16, sorted(loops)
+    for name, src in loops.items():
+        for owned in _DRIVER_OWNED:
+            assert owned not in src, (name, owned)
+        for m in re.finditer(r"(\w*)\.cache\(", src):
+            assert m.group(1) == "ckpt", (name, m.group(0))

@@ -43,18 +43,6 @@ def h64_sql(expr: str, salt: str = "") -> str:
     return f"CAST(('0x' || substr(md5({inner}), 1, {_HEX_DIGITS})) AS BIGINT)"
 
 
-def stable_key(text: Column | str, scope: Column | str) -> Column:
-    """Content-addressed entry key: ``sha1(collapse_ws(text) || scope)``.
-
-    Mirrors the reference's global bib key
-    (/root/reference/src/parse_latex_tralics.py:460-470): whitespace is
-    collapsed before hashing so formatting differences don't split keys.
-    """
-    t = F.col(text) if isinstance(text, str) else text
-    s = F.col(scope) if isinstance(scope, str) else scope
-    return F.sha1(F.concat(F.trim(F.regexp_replace(t, r"\s+", " ")), s))
-
-
 def minhash_term(token: Column, perm: int) -> Column:
     """One MinHash "permutation" applied to a token.
 
@@ -67,8 +55,3 @@ def minhash_term(token: Column, perm: int) -> Column:
     minwise-hash estimator.
     """
     return h64(token, salt=f"mh{perm}|")
-
-
-def minhash_term_sql(token_expr: str, perm: int) -> str:
-    """DuckDB-SQL rendering of :func:`minhash_term`."""
-    return h64_sql(token_expr, salt=f"mh{perm}|")

@@ -91,11 +91,6 @@ def extract_ref_ids(col: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(REF_MARKER_SPARK), 1)
 
 
-def extract_ref_ids_sql(expr: str) -> str:
-    """DuckDB oracle rendering of :func:`extract_ref_ids`."""
-    return f"regexp_extract_all({expr}, 'conv:([A-Za-z0-9_-]+)', 1)"
-
-
 @pandas_udf(StringType())
 def splice_markers(text: pd.Series, repl: pd.Series) -> pd.Series:
     """Replace each ``conv:<id>`` marker using a per-row replacement map.

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from unarxive_spark.functions.hashing import h64
@@ -102,8 +102,6 @@ def anf(
 ) -> ANFResult:
     """Forward-reachability sketches: after convergence vertex v's
     bitmaps sketch ``{u : v reaches u via directed edges}`` (v incl.)."""
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
     reg_cols = [f"r{i}" for i in range(n_regs)]
 
     verts = (
@@ -111,16 +109,6 @@ def anf(
         .unionByName(edges.select(F.col(dst).alias("conv_id")))
         .distinct()
     )
-    # sketches are pulled from dst into src → co-partition the cached
-    # adjacency on the join key (v); only the state shuffles per round
-    adj = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .repartition("v")
-        .cache()
-    )
-    adj.count()
-
     rho_cols, bm_exprs = [], []
     for i in range(n_regs):
         bm, rho = _init_bitmap(i)
@@ -157,10 +145,8 @@ def anf(
 
     states: list[DataFrame] = [state.select("conv_id", *reg_cols)]
     neighborhood: list[float] = []
-    popcount = None
     prev_pop = -1
     converged = False
-    it = 0
     # Delta propagation (guide §2.3 — shuffle fewer bytes): the merge
     # is a monotone bit_or, so a vertex whose sketch did NOT change in
     # round t contributes nothing new in round t+1 (its in-neighbors
@@ -174,53 +160,62 @@ def anf(
     # it per row per round and measured SLOWER than the full pull at
     # sf0.1; forwarding the stored value is what makes the cut free).
     delta = state  # round 0 pulls everything: every sketch is "new"
-    for it in range(max_iter):
-        pulled = adj.join(
-            delta.select(
-                F.col("conv_id").alias("v"), *reg_cols
-            ),
-            "v",
-        ).select(
-            F.col("u").alias("conv_id"),
-            *reg_cols,
-            F.lit(None).cast("long").alias("_oldpop"),
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        # sketches are pulled from dst into src → co-partition the cached
+        # adjacency on the join key (v); only the state shuffles per round
+        adj = ckpt.cache(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .distinct()
+            .repartition("v")
         )
-        new_state = (
-            state.select(
-                "conv_id", *reg_cols, F.col("_pop").alias("_oldpop")
+        adj.count()
+        for it in ckpt.steps(max_iter):
+            pulled = adj.join(
+                delta.select(
+                    F.col("conv_id").alias("v"), *reg_cols
+                ),
+                "v",
+            ).select(
+                F.col("u").alias("conv_id"),
+                *reg_cols,
+                F.lit(None).cast("long").alias("_oldpop"),
             )
-            .unionByName(pulled)
-            .groupBy("conv_id")
-            .agg(
-                *[F.bit_or(c).alias(c) for c in reg_cols],
-                F.max("_oldpop").alias("_oldpop"),
+            new_state = (
+                state.select(
+                    "conv_id", *reg_cols, F.col("_pop").alias("_oldpop")
+                )
+                .unionByName(pulled)
+                .groupBy("conv_id")
+                .agg(
+                    *[F.bit_or(c).alias(c) for c in reg_cols],
+                    F.max("_oldpop").alias("_oldpop"),
+                )
+                # popcount of the merged sketch, computed once per output row
+                # on the reduce side and stored with the state
+                .withColumn("_pop", pop.cast("long"))
             )
-            # popcount of the merged sketch, computed once per output row
-            # on the reduce side and stored with the state
-            .withColumn("_pop", pop.cast("long"))
-        )
-        # no action of its own: both metrics are observed in the pass
-        # that materializes the state (popcount read from the stored
-        # column, not recomputed)
-        pairs = Observation()
-        new_m, popcount = ckpt.superstep(
-            it,
-            new_state.observe(pairs, F.sum(est_pairs).alias("s")),
-            "total_popcount",
-            F.sum("_pop"),
-        )
-        neighborhood.append(pairs.get["s"])
-        state = new_m
-        delta = new_m.filter(F.col("_pop") != F.col("_oldpop"))
-        if keep_states:
-            states.append(state.select("conv_id", *reg_cols))
-        if popcount == prev_pop:
-            converged = True
-            break
-        prev_pop = popcount
+            # no action of its own: both metrics are observed in the pass
+            # that materializes the state (popcount read from the stored
+            # column, not recomputed)
+            new_m, popcount, seen = ckpt.superstep(
+                it,
+                new_state,
+                "total_popcount",
+                F.sum("_pop"),
+                observe={"pairs": F.sum(est_pairs)},
+            )
+            neighborhood.append(seen["pairs"])
+            state = new_m
+            delta = new_m.filter(F.col("_pop") != F.col("_oldpop"))
+            if keep_states:
+                states.append(state.select("conv_id", *reg_cols))
+            if popcount == prev_pop:
+                converged = True
+                break
+            prev_pop = popcount
     return ANFResult(
         sketches=state.select("conv_id", *reg_cols),
-        iterations=it + 1,
+        iterations=ckpt.iterations,
         converged=converged,
         n_regs=n_regs,
         neighborhood=neighborhood,

@@ -27,40 +27,39 @@ def bfs_distances(
     """→ (conv_id, distance) for every vertex reachable from ``sources``
     within ``max_hops`` directed hops (distance 0 = the sources)."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-    adj = (
-        edges.select(
-            F.col("src_conv_id").alias("u"), F.col("dst_conv_id").alias("v")
-        )
-        .distinct()
-        .repartition("u")
-        .cache()
-    )
     visited = spark.createDataFrame(
         [(s, 0) for s in sources], "conv_id string, distance int"
     )
     frontier = visited
-    for hop in range(1, max_hops + 1):
-        discovered = (
-            adj.join(
-                frontier.withColumnRenamed("conv_id", "u"),
-                "u",
+    with CheckpointManager(spark, None) as ckpt:
+        adj = ckpt.cache(
+            edges.select(
+                F.col("src_conv_id").alias("u"),
+                F.col("dst_conv_id").alias("v"),
             )
-            .select(F.col("v").alias("conv_id"))
             .distinct()
-            .join(visited, "conv_id", "left_anti")
-            .withColumn("distance", F.lit(hop))
+            .repartition("u")
         )
-        discovered, n_new = ckpt.superstep(
-            hop, discovered, "n_discovered", F.count(F.lit(1))
-        )
-        if n_new == 0:
-            break
-        visited = visited.unionByName(discovered).localCheckpoint(
-            eager=True
-        )
-        frontier = discovered
-    adj.unpersist()
+        for hop in range(1, max_hops + 1):
+            discovered = (
+                adj.join(
+                    frontier.withColumnRenamed("conv_id", "u"),
+                    "u",
+                )
+                .select(F.col("v").alias("conv_id"))
+                .distinct()
+                .join(visited, "conv_id", "left_anti")
+                .withColumn("distance", F.lit(hop))
+            )
+            discovered, n_new = ckpt.superstep(
+                hop, discovered, "n_discovered", F.count(F.lit(1))
+            )
+            if n_new == 0:
+                break
+            visited = visited.unionByName(discovered).localCheckpoint(
+                eager=True
+            )
+            frontier = discovered
     return visited
 
 
@@ -89,39 +88,39 @@ def landmark_distances(
     from unarxive_spark.functions.hashing import h64
     from unarxive_spark.operators.components import undirected
 
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-    adj = undirected(edges).select("u", "v").distinct().repartition("u").cache()
-    verts = adj.select(F.col("u").alias("conv_id")).distinct()
-    landmarks = (
-        verts.orderBy(h64("conv_id"), "conv_id")
-        .limit(int(n_landmarks))
-        .select(F.col("conv_id").alias("landmark"))
-    )
-    visited = landmarks.select(
-        "landmark",
-        F.col("landmark").alias("conv_id"),
-        F.lit(0).cast("int").alias("distance"),
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        discovered = (
-            adj.join(frontier.withColumnRenamed("conv_id", "u"), "u")
-            .select("landmark", F.col("v").alias("conv_id"))
-            .distinct()
-            .join(visited, ["landmark", "conv_id"], "left_anti")
-            .withColumn("distance", F.lit(hop))
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        adj = ckpt.cache(
+            undirected(edges).select("u", "v").distinct().repartition("u")
         )
-        discovered, n_new = ckpt.superstep(
-            hop, discovered, "n_discovered", F.count(F.lit(1))
+        verts = adj.select(F.col("u").alias("conv_id")).distinct()
+        landmarks = (
+            verts.orderBy(h64("conv_id"), "conv_id")
+            .limit(int(n_landmarks))
+            .select(F.col("conv_id").alias("landmark"))
         )
-        if n_new == 0:
-            break
-        visited = visited.unionByName(discovered).localCheckpoint(
-            eager=True
-        )
-        frontier = discovered
-    adj.unpersist()
+        visited = landmarks.select(
+            "landmark",
+            F.col("landmark").alias("conv_id"),
+            F.lit(0).cast("int").alias("distance"),
+        ).localCheckpoint(eager=True)
+        frontier = visited
+        for hop in range(1, max_hops + 1):
+            discovered = (
+                adj.join(frontier.withColumnRenamed("conv_id", "u"), "u")
+                .select("landmark", F.col("v").alias("conv_id"))
+                .distinct()
+                .join(visited, ["landmark", "conv_id"], "left_anti")
+                .withColumn("distance", F.lit(hop))
+            )
+            discovered, n_new = ckpt.superstep(
+                hop, discovered, "n_discovered", F.count(F.lit(1))
+            )
+            if n_new == 0:
+                break
+            visited = visited.unionByName(discovered).localCheckpoint(
+                eager=True
+            )
+            frontier = discovered
     return visited
 
 

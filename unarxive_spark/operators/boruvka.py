@@ -68,161 +68,156 @@ def boruvka_forest(
         raise ValueError("fixed_rounds must be >= 1")
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
-    pair = (
-        edges.filter(F.col("src_conv_id") != F.col("dst_conv_id"))
-        .select(
-            F.least("src_conv_id", "dst_conv_id").alias("a"),
-            F.greatest("src_conv_id", "dst_conv_id").alias("b"),
-            F.col("weight"),
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("weight").cast("long").alias("w"))
-        .select("a", "b", "w", _edge_key().alias("k"))
-        .repartition("a")
-        .cache()
-    )
-    pair.count()
-    labels = (
-        pair.select(F.col("a").alias("conv_id"))
-        .unionByName(pair.select(F.col("b").alias("conv_id")))
-        .distinct()
-        .select("conv_id", F.col("conv_id").alias("comp"))
-    )
-
-    rounds = fixed_rounds if fixed_rounds is not None else max_iter
-    parts: list[DataFrame] = []
-    for it in range(rounds):
-        la = labels.select(
-            F.col("conv_id").alias("a"), F.col("comp").alias("ca")
-        )
-        lb = labels.select(
-            F.col("conv_id").alias("b"), F.col("comp").alias("cb")
-        )
-        inter = (
-            pair.join(la, "a")
-            .join(lb, "b")
-            .filter(F.col("ca") != F.col("cb"))
-        )
-        # argmin incident edge per component: min over a struct keyed
-        # by the composite key CARRIES the edge payload, so the chosen
-        # edges need no join back onto a second evaluation of ``inter``
-        # (the old chosen_k ⋈ inter.distinct shape evaluated the
-        # pair⋈labels pipeline twice per round — guide §2.4)
-        edge_struct = F.struct("k", "a", "b", "w", "ca", "cb").alias("e")
-        incident = inter.select(
-            F.col("ca").alias("c"), edge_struct
-        ).unionByName(inter.select(F.col("cb").alias("c"), edge_struct))
-        # k is unique per pair row, so min(struct) IS the argmin edge;
-        # two components may pick the same edge → distinct
-        chosen = (
-            incident.groupBy("c")
-            .agg(F.min("e").alias("e"))
-            .select("e.a", "e.b", "e.w", "e.ca", "e.cb")
-            .distinct()
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        pair = ckpt.cache(
+            edges.filter(F.col("src_conv_id") != F.col("dst_conv_id"))
             .select(
-                "a", "b", "w", "ca", "cb",
-                F.lit(it).cast("long").alias("round"),
+                F.least("src_conv_id", "dst_conv_id").alias("a"),
+                F.greatest("src_conv_id", "dst_conv_id").alias("b"),
+                F.col("weight"),
             )
-            # ONE materialization per round: sel, the selection count
-            # and the contraction graph all re-scan this
-            .localCheckpoint(eager=True)
+            .groupBy("a", "b")
+            .agg(F.sum("weight").cast("long").alias("w"))
+            .select("a", "b", "w", _edge_key().alias("k"))
+            .repartition("a")
         )
-        sel = chosen.select("a", "b", "w", "round")
-        parts.append(sel)
-        n_sel = chosen.count()
-        if n_sel == 0:
-            if fixed_rounds is None:
-                break
-            labels = labels  # fixpoint: later fixed rounds change nothing
-            continue
-        # contract: hash-min over the selected component graph, with a
-        # POINTER-JUMP leg (lab(lab(x)) joins the label table to
-        # itself) so convergence is O(log chain) passes instead of
-        # O(chain) one-hop propagations (r5 ADVICE: a Borůvka round can
-        # merge a Θ(#components)-long chain). The fixpoint is unchanged
-        # — every leg only propagates already-reachable labels and the
-        # min is monotone — so the final labels (component minima) are
-        # identical.
-        cg = chosen.select(
-            F.col("ca").alias("x"), F.col("cb").alias("y")
-        ).unionByName(
-            chosen.select(F.col("cb").alias("x"), F.col("ca").alias("y"))
-        ).distinct()
-        newlab = (
-            labels.select("comp").distinct().select(
-                F.col("comp").alias("x"), F.col("comp").alias("lab")
+        pair.count()
+        labels = (
+            pair.select(F.col("a").alias("conv_id"))
+            .unionByName(pair.select(F.col("b").alias("conv_id")))
+            .distinct()
+            .select("conv_id", F.col("conv_id").alias("comp"))
+        )
+
+        rounds = fixed_rounds if fixed_rounds is not None else max_iter
+        parts: list[DataFrame] = []
+        for it in ckpt.steps(rounds):
+            la = labels.select(
+                F.col("conv_id").alias("a"), F.col("comp").alias("ca")
             )
-        ).localCheckpoint(eager=True)
-        lab_t = newlab.schema["lab"].dataType
-        for j in range(max_jump):
-            none_lab = F.lit(None).cast(lab_t).alias("_old")
-            nbr_leg = (
-                cg.join(
-                    newlab.withColumnRenamed("x", "y2").withColumnRenamed(
-                        "lab", "lab2"
-                    ),
-                    F.col("y") == F.col("y2"),
-                )
-                .select("x", F.col("lab2").alias("lab"), none_lab)
+            lb = labels.select(
+                F.col("conv_id").alias("b"), F.col("comp").alias("cb")
             )
-            # self leg doubles as the old-label carrier: the changed
-            # check is then a column diff on the materialized result,
-            # not a second join per pass
-            self_leg = newlab.select(
-                "x", "lab", F.col("lab").alias("_old")
+            inter = (
+                pair.join(la, "a")
+                .join(lb, "b")
+                .filter(F.col("ca") != F.col("cb"))
             )
-            jump_leg = (
-                newlab.alias("ja")
-                .join(
-                    newlab.alias("jb"),
-                    F.col("ja.lab") == F.col("jb.x"),
-                )
+            # argmin incident edge per component: min over a struct keyed
+            # by the composite key CARRIES the edge payload, so the chosen
+            # edges need no join back onto a second evaluation of ``inter``
+            # (the old chosen_k ⋈ inter.distinct shape evaluated the
+            # pair⋈labels pipeline twice per round — guide §2.4)
+            edge_struct = F.struct("k", "a", "b", "w", "ca", "cb").alias("e")
+            incident = inter.select(
+                F.col("ca").alias("c"), edge_struct
+            ).unionByName(inter.select(F.col("cb").alias("c"), edge_struct))
+            # k is unique per pair row, so min(struct) IS the argmin edge;
+            # two components may pick the same edge → distinct
+            chosen = (
+                incident.groupBy("c")
+                .agg(F.min("e").alias("e"))
+                .select("e.a", "e.b", "e.w", "e.ca", "e.cb")
+                .distinct()
                 .select(
-                    F.col("ja.x").alias("x"),
-                    F.col("jb.lab").alias("lab"),
-                    none_lab,
+                    "a", "b", "w", "ca", "cb",
+                    F.lit(it).cast("long").alias("round"),
                 )
+                # ONE materialization per round: sel, the selection count
+                # and the contraction graph all re-scan this
+                .localCheckpoint(eager=True)
             )
-            prop = (
-                nbr_leg.unionByName(self_leg)
-                .unionByName(jump_leg)
-                .groupBy("x")
-                .agg(
-                    F.min("lab").alias("lab"),
-                    F.max("_old").alias("_old"),
+            sel = chosen.select("a", "b", "w", "round")
+            parts.append(sel)
+            n_sel = chosen.count()
+            if n_sel == 0:
+                if fixed_rounds is None:
+                    break
+                labels = labels  # fixpoint: later fixed rounds change nothing
+                continue
+            # contract: hash-min over the selected component graph, with a
+            # POINTER-JUMP leg (lab(lab(x)) joins the label table to
+            # itself) so convergence is O(log chain) passes instead of
+            # O(chain) one-hop propagations (r5 ADVICE: a Borůvka round can
+            # merge a Θ(#components)-long chain). The fixpoint is unchanged
+            # — every leg only propagates already-reachable labels and the
+            # min is monotone — so the final labels (component minima) are
+            # identical.
+            cg = chosen.select(
+                F.col("ca").alias("x"), F.col("cb").alias("y")
+            ).unionByName(
+                chosen.select(F.col("cb").alias("x"), F.col("ca").alias("y"))
+            ).distinct()
+            newlab = (
+                labels.select("comp").distinct().select(
+                    F.col("comp").alias("x"), F.col("comp").alias("lab")
                 )
             ).localCheckpoint(eager=True)
-            changed = (
-                prop.filter(F.col("lab") != F.col("_old"))
-                .limit(1)
-                .count()
+            lab_t = newlab.schema["lab"].dataType
+            for j in range(max_jump):
+                none_lab = F.lit(None).cast(lab_t).alias("_old")
+                nbr_leg = (
+                    cg.join(
+                        newlab.withColumnRenamed("x", "y2").withColumnRenamed(
+                            "lab", "lab2"
+                        ),
+                        F.col("y") == F.col("y2"),
+                    )
+                    .select("x", F.col("lab2").alias("lab"), none_lab)
+                )
+                # self leg doubles as the old-label carrier: the changed
+                # check is then a column diff on the materialized result,
+                # not a second join per pass
+                self_leg = newlab.select(
+                    "x", "lab", F.col("lab").alias("_old")
+                )
+                jump_leg = (
+                    newlab.alias("ja")
+                    .join(
+                        newlab.alias("jb"),
+                        F.col("ja.lab") == F.col("jb.x"),
+                    )
+                    .select(
+                        F.col("ja.x").alias("x"),
+                        F.col("jb.lab").alias("lab"),
+                        none_lab,
+                    )
+                )
+                prop = (
+                    nbr_leg.unionByName(self_leg)
+                    .unionByName(jump_leg)
+                    .groupBy("x")
+                    .agg(
+                        F.min("lab").alias("lab"),
+                        F.max("_old").alias("_old"),
+                    )
+                ).localCheckpoint(eager=True)
+                changed = (
+                    prop.filter(F.col("lab") != F.col("_old"))
+                    .limit(1)
+                    .count()
+                )
+                newlab = prop.select("x", "lab")
+                if changed == 0:
+                    break
+            else:
+                raise RuntimeError(
+                    f"boruvka contraction did not converge in {max_jump} "
+                    "label-exchange passes — raise max_jump"
+                )
+            labels, _ = ckpt.superstep(
+                it,
+                labels.join(
+                    newlab.withColumnRenamed("x", "comp"), "comp"
+                ).select("conv_id", F.col("lab").alias("comp")),
+                "n_selected",
+                float(n_sel),
             )
-            newlab = prop.select("x", "lab")
-            if changed == 0:
-                break
         else:
-            raise RuntimeError(
-                f"boruvka contraction did not converge in {max_jump} "
-                "label-exchange passes — raise max_jump"
-            )
-        labels, _ = ckpt.superstep(
-            it,
-            labels.join(
-                newlab.withColumnRenamed("x", "comp"), "comp"
-            ).select("conv_id", F.col("lab").alias("comp")),
-            "n_selected",
-            float(n_sel),
-        )
-    else:
-        if fixed_rounds is None:
-            pair.unpersist()
-            raise RuntimeError(
-                f"boruvka: components still merging after {max_iter} rounds"
-            )
-    pair.unpersist()
+            if fixed_rounds is None:
+                raise RuntimeError(
+                    f"boruvka: components still merging after {max_iter} rounds"
+                )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -73,100 +73,97 @@ def bowtie_census(
     from unarxive_spark.operators.scc import strongly_connected_components
 
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
-    de = (
-        edges.select(
-            F.col("src_conv_id").alias("u"), F.col("dst_conv_id").alias("v")
+    with CheckpointManager(spark, None) as ckpt:
+        de = ckpt.cache(
+            edges.select(
+                F.col("src_conv_id").alias("u"),
+                F.col("dst_conv_id").alias("v"),
+            )
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .cache()
-    )
-    de.count()
+        de.count()
 
-    comps = strongly_connected_components(edges).components
-    sizes = comps.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    giant = (
-        sizes.orderBy(F.desc("n"), F.asc("component"))
-        .limit(1)
-        .collect()[0]["component"]
-    )  # metadata-sized scalar: the pivot of the whole census
+        comps = strongly_connected_components(edges).components
+        sizes = comps.groupBy("component").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        giant = (
+            sizes.orderBy(F.desc("n"), F.asc("component"))
+            .limit(1)
+            .collect()[0]["component"]
+        )  # metadata-sized scalar: the pivot of the whole census
 
-    # Reachability runs on the CONDENSATION (one vertex per SCC, one
-    # edge per linked SCC pair), not the raw graph: a vertex reaches
-    # the core iff its SCC reaches the giant SCC, every BFS hop scans
-    # the (much smaller) component graph, and the hop count is the
-    # condensation-DAG depth instead of the vertex-level BFS depth
-    # (guide §2.3 — shuffle the lightweight proxy, not the data).
-    comps_m = comps.localCheckpoint(eager=True)
-    cu = comps_m.select(
-        F.col("conv_id").alias("u"), F.col("component").alias("cu")
-    )
-    cv = comps_m.select(
-        F.col("conv_id").alias("v"), F.col("component").alias("cv")
-    )
-    ce = (
-        de.join(cu, "u")
-        .join(cv, "v")
-        .filter(F.col("cu") != F.col("cv"))
-        .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    seed = comps_m.select(F.col("component").alias("conv_id")).filter(
-        F.col("conv_id") == giant
-    ).distinct()
-    rev = ce.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    in_comps = _reach_fixpoint(ckpt, rev, seed, 0, max_iter)
-    out_comps = _reach_fixpoint(ckpt, ce, seed, 1, max_iter)
+        # Reachability runs on the CONDENSATION (one vertex per SCC, one
+        # edge per linked SCC pair), not the raw graph: a vertex reaches
+        # the core iff its SCC reaches the giant SCC, every BFS hop scans
+        # the (much smaller) component graph, and the hop count is the
+        # condensation-DAG depth instead of the vertex-level BFS depth
+        # (guide §2.3 — shuffle the lightweight proxy, not the data).
+        comps_m = comps.localCheckpoint(eager=True)
+        cu = comps_m.select(
+            F.col("conv_id").alias("u"), F.col("component").alias("cu")
+        )
+        cv = comps_m.select(
+            F.col("conv_id").alias("v"), F.col("component").alias("cv")
+        )
+        ce = (
+            de.join(cu, "u")
+            .join(cv, "v")
+            .filter(F.col("cu") != F.col("cv"))
+            .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        seed = comps_m.select(F.col("component").alias("conv_id")).filter(
+            F.col("conv_id") == giant
+        ).distinct()
+        rev = ce.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        in_comps = _reach_fixpoint(ckpt, rev, seed, 0, max_iter)
+        out_comps = _reach_fixpoint(ckpt, ce, seed, 1, max_iter)
 
-    verts = (
-        de.select(F.col("u").alias("conv_id"))
-        .unionByName(de.select(F.col("v").alias("conv_id")))
-        .distinct()
-    )
-    lab = (
-        verts.join(comps_m, "conv_id")
-        .join(
-            in_comps.select(
-                F.col("conv_id").alias("component")
-            ).withColumn("_i", F.lit(1)),
-            "component",
-            "left",
+        verts = (
+            de.select(F.col("u").alias("conv_id"))
+            .unionByName(de.select(F.col("v").alias("conv_id")))
+            .distinct()
         )
-        .join(
-            out_comps.select(
-                F.col("conv_id").alias("component")
-            ).withColumn("_o", F.lit(1)),
-            "component",
-            "left",
+        lab = (
+            verts.join(comps_m, "conv_id")
+            .join(
+                in_comps.select(
+                    F.col("conv_id").alias("component")
+                ).withColumn("_i", F.lit(1)),
+                "component",
+                "left",
+            )
+            .join(
+                out_comps.select(
+                    F.col("conv_id").alias("component")
+                ).withColumn("_o", F.lit(1)),
+                "component",
+                "left",
+            )
+            .select(
+                F.when(F.col("component") == giant, F.lit("scc"))
+                .when(F.col("_i").isNotNull(), F.lit("in"))
+                .when(F.col("_o").isNotNull(), F.lit("out"))
+                .otherwise(F.lit("other"))
+                .alias("region")
+            )
         )
-        .select(
-            F.when(F.col("component") == giant, F.lit("scc"))
-            .when(F.col("_i").isNotNull(), F.lit("in"))
-            .when(F.col("_o").isNotNull(), F.lit("out"))
-            .otherwise(F.lit("other"))
-            .alias("region")
+        # 4-row result: evaluate once so the cached edge table can be
+        # released before the caller collects
+        counts = (
+            lab.groupBy("region")
+            .agg(F.count(F.lit(1)).alias("n_vertices"))
+            .localCheckpoint(eager=True)
         )
-    )
-    # 4-row result: evaluate once so the cached edge table can be
-    # released before the caller collects
-    counts = (
-        lab.groupBy("region")
-        .agg(F.count(F.lit(1)).alias("n_vertices"))
-        .localCheckpoint(eager=True)
-    )
     regions = spark.createDataFrame(
         [("scc",), ("in",), ("out",), ("other",)], "region string"
     )
-    out = regions.join(counts, "region", "left").select(
+    return regions.join(counts, "region", "left").select(
         "region",
         F.coalesce("n_vertices", F.lit(0).cast("long")).alias(
             "n_vertices"
         ),
     )
-    de.unpersist()
-    return out

@@ -60,7 +60,6 @@ def connected_components(
     extra join per superstep is pure cost. The fixpoint (component =
     min conv_id) is identical either way."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
@@ -69,24 +68,20 @@ def connected_components(
             .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
             .distinct()
         )
-    # partitioned like the label state; the first superstep fills the cache
-    adj = undirected(edges).repartition(n_parts, "u").cache()
-
-    try:
-        resumed = ckpt.last_committed()
-        if resumed is not None:
-            labels = ckpt.restore(resumed).select("conv_id", "component")
-            start = resumed + 1
-        else:
+    with CheckpointManager(spark, checkpoint_dir) as ckpt:
+        # partitioned like the label state; superstep 0 fills the cache
+        adj = ckpt.cache(undirected(edges).repartition(n_parts, "u"))
+        labels = ckpt.resume(max_iter)
+        if labels is None:
             labels = vertices.select(
                 "conv_id", F.col("conv_id").alias("component")
             )
-            start = 0
-        labels = labels.repartition(n_parts, "conv_id")
+        labels = labels.select("conv_id", "component").repartition(
+            n_parts, "conv_id"
+        )
 
         converged = False
-        it = start
-        for it in range(start, max_iter):
+        for it in ckpt.steps(max_iter):
             # neighbour-min: push each vertex's label to its neighbours and
             # take the min per receiver (the gather, the one exchange); the
             # state side of both joins is co-partitioned with adj and with
@@ -138,6 +133,4 @@ def connected_components(
             if n_changed == 0:
                 converged = True
                 break
-    finally:
-        adj.unpersist()
-    return ComponentsResult(labels, it + 1, converged)
+    return ComponentsResult(labels, ckpt.iterations, converged)

@@ -58,8 +58,6 @@ def ic_influence_spread(
     if n_sims < 1 or n_seeds < 1 or hops < 0:
         raise ValueError("n_sims/n_seeds must be >= 1, hops >= 0")
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-
     de = (
         edges.select("src_conv_id", "dst_conv_id")
         .filter(F.col("src_conv_id") != F.col("dst_conv_id"))
@@ -75,13 +73,12 @@ def ic_influence_spread(
             F.col("sim_id").cast("string"),
         )
     )
-    live = (
-        de.crossJoin(F.broadcast(sims))
-        .filter(coin % 1000 < F.lit(int(p_permille)))
-        .repartition("sim_id", "src_conv_id")
-        .cache()
-    )
-    try:
+    with CheckpointManager(spark, checkpoint_dir) as ckpt:
+        live = ckpt.cache(
+            de.crossJoin(F.broadcast(sims))
+            .filter(coin % 1000 < F.lit(int(p_permille)))
+            .repartition("sim_id", "src_conv_id")
+        )
         live.count()
 
         verts = (
@@ -92,19 +89,15 @@ def ic_influence_spread(
         seeds = verts.orderBy(
             h64(F.col("conv_id"), salt="icseed|"), F.col("conv_id")
         ).limit(n_seeds)
-        resumed = ckpt.last_committed() if hops > 0 else None
-        if resumed is not None:
-            # iteration h holds hops <= h + 1: a longer earlier run resumes
-            # from this run's last hop
-            reached = ckpt.restore(min(resumed, hops - 1))
-            start = resumed + 1
-        else:
+        # iteration h holds hops <= h + 1: a longer earlier run resumes
+        # from this run's last hop
+        reached = ckpt.resume(hops)
+        if reached is None:
             reached = seeds.crossJoin(F.broadcast(sims)).select(
                 "sim_id", "conv_id", F.lit(0).alias("_hop")
             )
-            start = 0
 
-        for hop in range(start, hops):
+        for hop in ckpt.steps(hops):
             frontier = reached.filter(F.col("_hop") == hop)
             new = (
                 live.join(
@@ -127,8 +120,6 @@ def ic_influence_spread(
             .agg(F.count(F.lit(1)).alias("n_live_edges"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        live.unpersist()
     n_reach = reached.groupBy("sim_id").agg(
         F.count(F.lit(1)).alias("n_reached")
     )

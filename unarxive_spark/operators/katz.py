@@ -66,17 +66,12 @@ def katz_centrality(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-    adj = _integer_weight_edges(edges).repartition("src").cache()
-    try:
-        resumed = ckpt.last_committed()
-        if resumed is not None:
-            # round r's state does not depend on the horizon: a longer
-            # earlier run resumes from this run's last round
-            state = ckpt.restore(min(resumed, rounds))
-            start = resumed + 1
-        else:
+    with CheckpointManager(edges.sparkSession, checkpoint_dir) as ckpt:
+        adj = ckpt.cache(_integer_weight_edges(edges).repartition("src"))
+        # round r's state does not depend on the horizon: a longer
+        # earlier run resumes from this run's last round
+        state = ckpt.resume(rounds + 1)
+        if state is None:
             verts = (
                 adj.select(F.col("src").alias("conv_id"))
                 .unionByName(adj.select(F.col("dst").alias("conv_id")))
@@ -92,8 +87,7 @@ def katz_centrality(
                 "max_walks",
                 F.max("w"),
             )
-            start = 1
-        for rnd in range(start, rounds + 1):
+        for rnd in ckpt.steps(rounds + 1):
             gathered = (
                 adj.join(
                     state.select(
@@ -116,8 +110,6 @@ def katz_centrality(
                 )
             )
             state, _ = ckpt.superstep(rnd, state, "max_walks", F.max("w"))
-    finally:
-        adj.unpersist()
     # z = 2*z_prev + w with z_prev >= w_prev >= 0 implies z >= w >= 0;
     # a violation is only reachable through int64 wrap-around.
     guard = F.assert_true(

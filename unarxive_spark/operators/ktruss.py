@@ -101,12 +101,10 @@ def k_truss(
     the directed input edge table."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3: {k}")
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
+    ckpt = CheckpointManager(edges.sparkSession, None)
     live = canonical_edges(edges, by_degree=False)
     n_live = live.count()
-    for it in range(max_iter):
+    for it in ckpt.steps(max_iter):
         kept = (
             live.join(_supports(live), ["a", "b"], "left")
             .filter(F.coalesce("sup", F.lit(0)) >= k - 2)

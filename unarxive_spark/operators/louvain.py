@@ -94,7 +94,6 @@ def _und_long(edges: DataFrame, weight_col: str) -> DataFrame:
 def _local_moves(
     und: DataFrame,
     selfw: DataFrame,
-    ckpt: CheckpointManager,
     max_rounds: int,
     round_offset: int,
 ) -> tuple[DataFrame, int, bool]:
@@ -104,156 +103,154 @@ def _local_moves(
     both-directions self-loop weight per vertex (empty at level 1).
     Returns (state(conv_id, comm), rounds_run, converged).
     """
-    und = und.repartition("u").cache()
-    # vertices = adjacency endpoints ∪ self-loop-only super-vertices
-    # (a fully-internal community contracts to a vertex with ONLY a
-    # self-loop — it must keep existing and keep its degree)
-    verts = (
-        und.select(F.col("u").alias("conv_id"))
-        .unionByName(selfw.select(F.col("v").alias("conv_id")))
-        .distinct()
-    )
-    deg = (
-        verts.join(
-            und.groupBy(F.col("u").alias("conv_id")).agg(
-                F.sum("w").alias("_ke")
-            ),
-            "conv_id",
-            "left",
+    with CheckpointManager(und.sparkSession, None) as ckpt:
+        und = ckpt.cache(und.repartition("u"))
+        # vertices = adjacency endpoints ∪ self-loop-only super-vertices
+        # (a fully-internal community contracts to a vertex with ONLY a
+        # self-loop — it must keep existing and keep its degree)
+        verts = (
+            und.select(F.col("u").alias("conv_id"))
+            .unionByName(selfw.select(F.col("v").alias("conv_id")))
+            .distinct()
         )
-        .join(
-            selfw.select(F.col("v").alias("conv_id"), "sw"),
-            "conv_id",
-            "left",
-        )
-        .select(
-            "conv_id",
-            (
-                F.coalesce(F.col("_ke"), F.lit(0))
-                + F.coalesce(F.col("sw"), F.lit(0))
-            ).alias("k"),
-        )
-        .cache()
-    )
-    # scalar 2m (one init action per level, like ANF's init aggregate)
-    tm = int(
-        deg.agg(F.coalesce(F.sum("k"), F.lit(0))).collect()[0][0]
-    )
-    state = deg.select(
-        "conv_id", F.col("conv_id").alias("comm")
-    )
-    converged = False
-    zero_streak = 0
-    r = 0
-    for r in range(max_rounds):
-        lab_v = state.select(
-            F.col("conv_id").alias("v"), F.col("comm").alias("c")
-        )
-        # Σ_tot per community (includes self-loop degrees)
-        ctot = (
-            state.join(deg, "conv_id")
-            .groupBy("comm")
-            .agg(F.sum("k").alias("tot"))
-        )
-        # k_{i,C}: weight from i to each neighbor community, plus an
-        # injected 0-row for i's own community so "stay" is always a
-        # candidate (sum-combine keeps the real k_{i,A} when present)
-        kic = (
-            und.join(lab_v, "v")
-            .groupBy(F.col("u").alias("conv_id"), F.col("c").alias("cand"))
-            .agg(F.sum("w").alias("kic"))
-        )
-        cand = (
-            kic.unionByName(
-                state.select(
-                    "conv_id",
-                    F.col("comm").alias("cand"),
-                    F.lit(0).cast("long").alias("kic"),
-                )
+        deg = ckpt.cache(
+            verts.join(
+                und.groupBy(F.col("u").alias("conv_id")).agg(
+                    F.sum("w").alias("_ke")
+                ),
+                "conv_id",
+                "left",
             )
-            .groupBy("conv_id", "cand")
-            .agg(F.sum("kic").alias("kic"))
-        )
-        gains = (
-            cand.join(state, "conv_id")
-            .join(deg, "conv_id")
-            .join(ctot.withColumnRenamed("comm", "cand"), "cand")
+            .join(
+                selfw.select(F.col("v").alias("conv_id"), "sw"),
+                "conv_id",
+                "left",
+            )
             .select(
                 "conv_id",
-                "cand",
-                "comm",
                 (
-                    F.lit(int(tm)) * F.col("kic")
-                    - F.col("k")
-                    * (
-                        F.col("tot")
-                        - F.when(
-                            F.col("cand") == F.col("comm"), F.col("k")
-                        ).otherwise(F.lit(0))
+                    F.coalesce(F.col("_ke"), F.lit(0))
+                    + F.coalesce(F.col("sw"), F.lit(0))
+                ).alias("k"),
+            )
+        )
+        # scalar 2m (one init action per level, like ANF's init aggregate)
+        tm = int(
+            deg.agg(F.coalesce(F.sum("k"), F.lit(0))).collect()[0][0]
+        )
+        state = deg.select(
+            "conv_id", F.col("conv_id").alias("comm")
+        )
+        converged = False
+        zero_streak = 0
+        r = 0
+        for r in range(max_rounds):
+            lab_v = state.select(
+                F.col("conv_id").alias("v"), F.col("comm").alias("c")
+            )
+            # Σ_tot per community (includes self-loop degrees)
+            ctot = (
+                state.join(deg, "conv_id")
+                .groupBy("comm")
+                .agg(F.sum("k").alias("tot"))
+            )
+            # k_{i,C}: weight from i to each neighbor community, plus an
+            # injected 0-row for i's own community so "stay" is always a
+            # candidate (sum-combine keeps the real k_{i,A} when present)
+            kic = (
+                und.join(lab_v, "v")
+                .groupBy(F.col("u").alias("conv_id"), F.col("c").alias("cand"))
+                .agg(F.sum("w").alias("kic"))
+            )
+            cand = (
+                kic.unionByName(
+                    state.select(
+                        "conv_id",
+                        F.col("comm").alias("cand"),
+                        F.lit(0).cast("long").alias("kic"),
                     )
-                ).alias("gain"),
-            )
-        )
-        # argmax gain, tie → min community id: min(struct(-gain, cand)),
-        # and the stay gain (the unique cand == comm row, guaranteed by
-        # the injected 0-rows) rides in the SAME aggregation — the old
-        # separate filter+join re-evaluated the whole und⋈state gains
-        # pipeline a second time per round (guide §2.4)
-        best = gains.groupBy("conv_id").agg(
-            F.min(F.struct((-F.col("gain")).alias("ng"), "cand")).alias(
-                "_b"
-            ),
-            F.max(
-                F.when(F.col("cand") == F.col("comm"), F.col("gain"))
-            ).alias("stay_gain"),
-        )
-        eligible = (
-            F.pmod(h64(F.col("conv_id")), F.lit(2))
-            == F.lit((round_offset + r) % 2)
-        )
-        new_state = (
-            state.join(best, "conv_id", "left")
-            .select(
-                "conv_id",
-                F.when(
-                    eligible
-                    & F.col("_b").isNotNull()
-                    & (-F.col("_b.ng") > F.col("stay_gain")),
-                    F.col("_b.cand"),
                 )
-                .otherwise(F.col("comm"))
-                .alias("comm"),
-                F.when(
-                    eligible
-                    & F.col("_b").isNotNull()
-                    & (-F.col("_b.ng") > F.col("stay_gain"))
-                    & (F.col("_b.cand") != F.col("comm")),
-                    F.lit(1),
-                )
-                .otherwise(F.lit(0))
-                .alias("_moved"),
+                .groupBy("conv_id", "cand")
+                .agg(F.sum("kic").alias("kic"))
             )
-        )
-        new_m, n_moves = ckpt.superstep(
-            round_offset + r,
-            new_state,
-            "n_moves",
-            F.coalesce(F.sum("_moved"), F.lit(0)),
-        )
-        state = new_m.select("conv_id", "comm")
-        if n_moves == 0:
-            zero_streak += 1
-            # one full even+odd cycle with no move = stable fixpoint
-            if zero_streak >= 2:
-                converged = True
-                break
-        else:
-            zero_streak = 0
-    # state is checkpointed superstep output — the cached adjacency/degree
-    # frames are dead now; with levels>1 each contraction would
-    # otherwise layer more cached state on top (ADVICE r4)
-    und.unpersist()
-    deg.unpersist()
+            gains = (
+                cand.join(state, "conv_id")
+                .join(deg, "conv_id")
+                .join(ctot.withColumnRenamed("comm", "cand"), "cand")
+                .select(
+                    "conv_id",
+                    "cand",
+                    "comm",
+                    (
+                        F.lit(int(tm)) * F.col("kic")
+                        - F.col("k")
+                        * (
+                            F.col("tot")
+                            - F.when(
+                                F.col("cand") == F.col("comm"), F.col("k")
+                            ).otherwise(F.lit(0))
+                        )
+                    ).alias("gain"),
+                )
+            )
+            # argmax gain, tie → min community id: min(struct(-gain, cand)),
+            # and the stay gain (the unique cand == comm row, guaranteed by
+            # the injected 0-rows) rides in the SAME aggregation — the old
+            # separate filter+join re-evaluated the whole und⋈state gains
+            # pipeline a second time per round (guide §2.4)
+            best = gains.groupBy("conv_id").agg(
+                F.min(F.struct((-F.col("gain")).alias("ng"), "cand")).alias(
+                    "_b"
+                ),
+                F.max(
+                    F.when(F.col("cand") == F.col("comm"), F.col("gain"))
+                ).alias("stay_gain"),
+            )
+            eligible = (
+                F.pmod(h64(F.col("conv_id")), F.lit(2))
+                == F.lit((round_offset + r) % 2)
+            )
+            new_state = (
+                state.join(best, "conv_id", "left")
+                .select(
+                    "conv_id",
+                    F.when(
+                        eligible
+                        & F.col("_b").isNotNull()
+                        & (-F.col("_b.ng") > F.col("stay_gain")),
+                        F.col("_b.cand"),
+                    )
+                    .otherwise(F.col("comm"))
+                    .alias("comm"),
+                    F.when(
+                        eligible
+                        & F.col("_b").isNotNull()
+                        & (-F.col("_b.ng") > F.col("stay_gain"))
+                        & (F.col("_b.cand") != F.col("comm")),
+                        F.lit(1),
+                    )
+                    .otherwise(F.lit(0))
+                    .alias("_moved"),
+                )
+            )
+            new_m, n_moves = ckpt.superstep(
+                round_offset + r,
+                new_state,
+                "n_moves",
+                F.coalesce(F.sum("_moved"), F.lit(0)),
+            )
+            state = new_m.select("conv_id", "comm")
+            if n_moves == 0:
+                zero_streak += 1
+                # one full even+odd cycle with no move = stable fixpoint
+                if zero_streak >= 2:
+                    converged = True
+                    break
+            else:
+                zero_streak = 0
+    # state is checkpointed superstep output, so the block released the
+    # cached adjacency/degree frames: with levels>1 each contraction
+    # would otherwise layer more cached state on top (ADVICE r4)
     return state, r + 1, converged
 
 
@@ -269,7 +266,6 @@ def louvain(
     repeats local moves on the contracted super-vertex graph and maps
     the final communities back to original vertices."""
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
     und = _und_long(edges, weight_col)
     # derive the vertex-id type from the input so non-string ids don't
     # trip the later unionByName with an opaque type error (ADVICE r4)
@@ -287,7 +283,7 @@ def louvain(
         # of (level, round) so a fixed SQL unroll (q87's two-level
         # oracle) replays it without knowing when level 1 converged
         state, rounds, conv = _local_moves(
-            und, selfw, ckpt, max_rounds, level * max_rounds
+            und, selfw, max_rounds, level * max_rounds
         )
         total_rounds += rounds
         converged = converged and conv

@@ -61,7 +61,6 @@ def label_propagation(
     checkpoint_dir: str | None = None,
 ) -> LPAResult:
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     vertices = (
@@ -69,23 +68,19 @@ def label_propagation(
         .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
         .distinct()
     )
-    # partitioned like the label state; the first superstep fills the cache
-    adj = _undirected_weighted(edges).repartition(n_parts, "u").cache()
-
-    try:
-        resumed = ckpt.last_committed()
-        if resumed is not None:
-            labels = ckpt.restore(resumed).select("conv_id", "label")
-            start = resumed + 1
-        else:
+    with CheckpointManager(spark, checkpoint_dir) as ckpt:
+        # partitioned like the label state; superstep 0 fills the cache
+        adj = ckpt.cache(_undirected_weighted(edges).repartition(n_parts, "u"))
+        labels = ckpt.resume(n_iter)
+        if labels is None:
             labels = vertices.select(
                 "conv_id", F.col("conv_id").alias("label")
             )
-            start = 0
-        labels = labels.repartition(n_parts, "conv_id")
+        labels = labels.select("conv_id", "label").repartition(
+            n_parts, "conv_id"
+        )
 
-        it = start
-        for it in range(start, n_iter):
+        for it in ckpt.steps(n_iter):
             # gather neighbour labels: v receives u's label with weight w.
             # The state side of the join is co-partitioned with adj; the
             # received rows are exchanged ONCE, by receiver, so both
@@ -131,9 +126,7 @@ def label_propagation(
                 F.count_if(F.col("label") != F.col("_old")),
             )
             labels = new_m.select("conv_id", "label")
-    finally:
-        adj.unpersist()
-    return LPAResult(labels, it + 1 if n_iter > start else 0)
+    return LPAResult(labels, ckpt.iterations)
 
 
 def seeded_label_propagation(
@@ -156,27 +149,23 @@ def seeded_label_propagation(
     two map-side-combinable aggs); the anchor override is a broadcast-
     sized left join, and convergence is label-change count == 0.
     """
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
     vertices = (
         edges.select(F.col("src_conv_id").alias("conv_id"))
         .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
         .distinct()
     )
-    adj = _undirected_weighted(edges).repartition("u").cache()
-    anchors = seeds.select(
-        "conv_id", F.col("label").alias("_seed")
-    ).cache()
-    try:
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        adj = ckpt.cache(_undirected_weighted(edges).repartition("u"))
+        anchors = ckpt.cache(
+            seeds.select("conv_id", F.col("label").alias("_seed"))
+        )
         adj.count()
 
         labels = vertices.join(anchors, "conv_id", "left").select(
             "conv_id", F.col("_seed").alias("label")
         )
 
-        it = 0
-        for it in range(n_iter):
+        for it in ckpt.steps(n_iter):
             received = adj.join(
                 labels.filter(F.col("label").isNotNull()).withColumnRenamed(
                     "conv_id", "u"
@@ -221,7 +210,4 @@ def seeded_label_propagation(
             labels = new_m.select("conv_id", "label")
             if n_changed == 0:
                 break
-    finally:
-        anchors.unpersist()
-        adj.unpersist()
-    return LPAResult(labels=labels, iterations=it + 1)
+    return LPAResult(labels=labels, iterations=ckpt.iterations)

@@ -66,12 +66,6 @@ def maximal_matching(
         raise ValueError("fixed_rounds must be >= 1")
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
-    adj = undirected(edges).repartition("u").cache()
-    adj.count()
-
     prio = F.concat(
         F.lower(F.lpad(F.hex(h64(F.col("v"), salt=salt)), 15, "0")),
         F.lit("|"),
@@ -83,60 +77,66 @@ def maximal_matching(
     # the live adjacency (edges whose endpoints are both unmatched) IS
     # the state; a vertex leaves the live set exactly when matched, so
     # removing all edges incident to matched endpoints keeps it exact
-    ladj = adj
-    for it in range(rounds):
-        props = (
-            ladj.select("u", prio.alias("__p"))
-            .groupBy("u")
-            .agg(F.min("__p").alias("__pm"))
-            # strip the fixed 16-char "%015x|" prefix back to the id
-            .select("u", F.col("__pm").substr(F.lit(17), F.length("__pm")).alias("tgt"))
-        )
-        matched = (
-            props.alias("l")
-            .join(
-                props.alias("r"),
-                (F.col("r.u") == F.col("l.tgt"))
-                & (F.col("r.tgt") == F.col("l.u")),
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        adj = ckpt.cache(undirected(edges).repartition("u"))
+        adj.count()
+        ladj = adj
+        for it in ckpt.steps(rounds):
+            props = (
+                ladj.select("u", prio.alias("__p"))
+                .groupBy("u")
+                .agg(F.min("__p").alias("__pm"))
+                # strip the fixed 16-char "%015x|" prefix back to the id
+                .select(
+                    "u",
+                    F.col("__pm")
+                    .substr(F.lit(17), F.length("__pm"))
+                    .alias("tgt"),
+                )
             )
-            .filter(F.col("l.u") < F.col("l.tgt"))
-            .select(
-                F.col("l.u").alias("conv_a"),
-                F.col("l.tgt").alias("conv_b"),
-                F.lit(it).cast("long").alias("round"),
+            matched = (
+                props.alias("l")
+                .join(
+                    props.alias("r"),
+                    (F.col("r.u") == F.col("l.tgt"))
+                    & (F.col("r.tgt") == F.col("l.u")),
+                )
+                .filter(F.col("l.u") < F.col("l.tgt"))
+                .select(
+                    F.col("l.u").alias("conv_a"),
+                    F.col("l.tgt").alias("conv_b"),
+                    F.lit(it).cast("long").alias("round"),
+                )
             )
-        )
-        # materialize the round's matches ONCE, then derive the live-
-        # adjacency update from the checkpointed result — evaluating
-        # the props⋈props pipeline once per consumer would double the
-        # round (guide §2.4)
-        matched_m = matched.localCheckpoint(eager=True)
-        parts.append(matched_m)
-        ends = matched_m.select(
-            F.col("conv_a").alias("conv_id")
-        ).unionByName(matched_m.select(F.col("conv_b").alias("conv_id")))
-        new_ladj, n_live_edges = ckpt.superstep(
-            it,
-            ladj.join(
-                ends.withColumnRenamed("conv_id", "u"), "u", "left_anti"
-            ).join(
-                ends.withColumnRenamed("conv_id", "v"), "v", "left_anti"
-            ),
-            "n_live_edges",
-            F.count(F.lit(1)),
-        )
-        # convergence mode: stop when no live edge remains
-        if fixed_rounds is None and n_live_edges == 0:
-            break
-        ladj = new_ladj
-    else:
-        if fixed_rounds is None:
-            adj.unpersist()
-            raise RuntimeError(
-                f"maximal_matching: live edges remain after {max_iter} "
-                "rounds — raise max_iter"
+            # materialize the round's matches ONCE, then derive the live-
+            # adjacency update from the checkpointed result — evaluating
+            # the props⋈props pipeline once per consumer would double the
+            # round (guide §2.4)
+            matched_m = matched.localCheckpoint(eager=True)
+            parts.append(matched_m)
+            ends = matched_m.select(
+                F.col("conv_a").alias("conv_id")
+            ).unionByName(matched_m.select(F.col("conv_b").alias("conv_id")))
+            new_ladj, n_live_edges = ckpt.superstep(
+                it,
+                ladj.join(
+                    ends.withColumnRenamed("conv_id", "u"), "u", "left_anti"
+                ).join(
+                    ends.withColumnRenamed("conv_id", "v"), "v", "left_anti"
+                ),
+                "n_live_edges",
+                F.count(F.lit(1)),
             )
-    adj.unpersist()
+            # convergence mode: stop when no live edge remains
+            if fixed_rounds is None and n_live_edges == 0:
+                break
+            ladj = new_ladj
+        else:
+            if fixed_rounds is None:
+                raise RuntimeError(
+                    f"maximal_matching: live edges remain after {max_iter} "
+                    "rounds — raise max_iter"
+                )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -43,11 +43,6 @@ def maximal_independent_set(
     """Deterministic MIS of the undirected graph → one column
     ``conv_id`` (independent: no edge inside; maximal: every vertex
     outside has a neighbor inside)."""
-    spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-
-    adj = undirected(edges).repartition("u").cache()
-    adj.count()
     live = (
         edges.select(F.col("src_conv_id").alias("conv_id"))
         .unionByName(edges.select(F.col("dst_conv_id").alias("conv_id")))
@@ -63,43 +58,48 @@ def maximal_independent_set(
         F.col("conv_id"),
     )
 
-    mis_parts: list[DataFrame] = []
-    for it in range(max_iter):
-        lp = live.select("conv_id", prio.alias("__p"))
-        # neighbor-min priority among LIVE neighbors only
-        nmin = (
-            adj.join(lp.withColumnRenamed("conv_id", "u"), "u")
-            .select(F.col("v").alias("conv_id"), "__p")
-            .join(lp.select("conv_id"), "conv_id", "left_semi")
-            .groupBy("conv_id")
-            .agg(F.min("__p").alias("__nmin"))
-        )
-        winners = (
-            lp.join(nmin, "conv_id", "left")
-            .filter(
-                F.col("__nmin").isNull() | (F.col("__p") < F.col("__nmin"))
+    with CheckpointManager(edges.sparkSession, None) as ckpt:
+        adj = ckpt.cache(undirected(edges).repartition("u"))
+        adj.count()
+        mis_parts: list[DataFrame] = []
+        for it in ckpt.steps(max_iter):
+            lp = live.select("conv_id", prio.alias("__p"))
+            # neighbor-min priority among LIVE neighbors only
+            nmin = (
+                adj.join(lp.withColumnRenamed("conv_id", "u"), "u")
+                .select(F.col("v").alias("conv_id"), "__p")
+                .join(lp.select("conv_id"), "conv_id", "left_semi")
+                .groupBy("conv_id")
+                .agg(F.min("__p").alias("__nmin"))
             )
-            .select("conv_id")
-        )
-        # remove winners and their neighbors from the live set
-        removed = winners.unionByName(
-            adj.join(
-                winners.withColumnRenamed("conv_id", "u"), "u"
-            ).select(F.col("v").alias("conv_id"))
-        ).distinct()
-        new_live, n_live = ckpt.superstep(
-            it,
-            live.join(removed, "conv_id", "left_anti"),
-            "n_live",
-            F.count(F.lit(1)),
-        )
-        mis_parts.append(winners)
-        live = new_live
-        if n_live == 0:
-            out = mis_parts[0]
-            for part in mis_parts[1:]:
-                out = out.unionByName(part)
-            return out.distinct()
+            winners = (
+                lp.join(nmin, "conv_id", "left")
+                .filter(
+                    F.col("__nmin").isNull() | (F.col("__p") < F.col("__nmin"))
+                )
+                .select("conv_id")
+            )
+            # remove winners and their neighbors from the live set
+            removed = winners.unionByName(
+                adj.join(
+                    winners.withColumnRenamed("conv_id", "u"), "u"
+                ).select(F.col("v").alias("conv_id"))
+            ).distinct()
+            new_live, n_live = ckpt.superstep(
+                it,
+                live.join(removed, "conv_id", "left_anti"),
+                "n_live",
+                F.count(F.lit(1)),
+            )
+            mis_parts.append(winners)
+            live = new_live
+            if n_live == 0:
+                out = mis_parts[0]
+                for part in mis_parts[1:]:
+                    out = out.unionByName(part)
+                # the winners are lazy over the cached adjacency, which the
+                # block releases: materialize them first
+                return out.distinct().localCheckpoint(eager=True)
     raise RuntimeError(
         f"maximal_independent_set: live vertices remain after "
         f"{max_iter} rounds — raise max_iter"

@@ -41,7 +41,6 @@ analytics layer over its citation network (README.md:27-32), with
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -102,109 +101,99 @@ def pagerank(
     uniform teleport.
     """
     spark = edges.sparkSession
-    ckpt = CheckpointManager(spark, checkpoint_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     if vertices is None:
         vertices = _vertices(edges)
-    # vertex table with the dangling flag, partitioned like the rank
-    # state and cached ONCE for the whole run
     src_ids = edges.select(F.col("src_conv_id").alias("conv_id")).distinct()
-    vertices = (
-        vertices.join(src_ids.withColumn("_ho", F.lit(1)), "conv_id", "left")
-        .select(
-            "conv_id", F.coalesce("_ho", F.lit(0)).alias("has_out")
-        )
-        .repartition(n_parts, "conv_id")
-        .cache()
-    )
-    # danglers are counted from the built vertex table itself: correct
-    # even when a caller-supplied ``vertices`` frame omits some edge
-    # sources (n - #sources would undercount and leak rank mass)
-    n, n_dangling = vertices.agg(
-        F.count(F.lit(1)), F.count_if(F.col("has_out") == 0)
-    ).collect()[0]
-    if n == 0:
-        vertices.unpersist()
-        empty = spark.createDataFrame([], RANK_SCHEMA)
-        return PageRankResult(empty, 0, True)
-
-    w = F.col("weight") if weighted else F.lit(1.0)
-    out_norm = edges.groupBy("src_conv_id").agg(F.sum(w).alias("out_w"))
-    # transition probability per edge, fixed across iterations; the
-    # first superstep fills the cache
-    edges_norm = (
-        edges.join(out_norm, "src_conv_id")
-        .select(
-            F.col("src_conv_id").alias("src"),
-            F.col("dst_conv_id").alias("dst"),
-            (w / F.col("out_w")).alias("p"),
-        )
-        .repartition(n_parts, "src")
-        .cache()
-    )
-
-    def dangling_sum(col: str = "rank"):
-        return F.coalesce(
-            F.sum(F.when(F.col("has_out") == 0, F.col(col))), F.lit(0.0)
-        )
-
-    start_iter = 0
-    resumed = ckpt.last_committed()
-    if resumed is not None:
-        restored = ckpt.restore(resumed).select(
-            "conv_id", "rank", "has_out"
-        )
-        dmass = restored.agg(dangling_sum()).collect()[0][0]
-        ranks = restored.repartition(n_parts, "conv_id")
-        start_iter = resumed + 1
-    elif initial_ranks is not None:
-        # one job: the seeded state, its total and its dangling mass
-        obs = Observation()
-        seeded = (
+    with CheckpointManager(spark, checkpoint_dir) as ckpt:
+        # vertex table with the dangling flag, partitioned like the rank
+        # state and cached ONCE for the whole run
+        vertices = ckpt.cache(
             vertices.join(
-                initial_ranks.select("conv_id", F.col("rank").alias("_r0")),
-                "conv_id",
-                "left",
+                src_ids.withColumn("_ho", F.lit(1)), "conv_id", "left"
             )
+            .select("conv_id", F.coalesce("_ho", F.lit(0)).alias("has_out"))
+            .repartition(n_parts, "conv_id")
+        )
+        # danglers are counted from the built vertex table itself: correct
+        # even when a caller-supplied ``vertices`` frame omits some edge
+        # sources (n - #sources would undercount and leak rank mass)
+        n, n_dangling = vertices.agg(
+            F.count(F.lit(1)), F.count_if(F.col("has_out") == 0)
+        ).collect()[0]
+        if n == 0:
+            empty = spark.createDataFrame([], RANK_SCHEMA)
+            return PageRankResult(empty, 0, True)
+
+        w = F.col("weight") if weighted else F.lit(1.0)
+        out_norm = edges.groupBy("src_conv_id").agg(F.sum(w).alias("out_w"))
+        # transition probability per edge, fixed across iterations; the
+        # first superstep fills the cache
+        edges_norm = ckpt.cache(
+            edges.join(out_norm, "src_conv_id")
             .select(
+                F.col("src_conv_id").alias("src"),
+                F.col("dst_conv_id").alias("dst"),
+                (w / F.col("out_w")).alias("p"),
+            )
+            .repartition(n_parts, "src")
+        )
+
+        def dangling_sum(col: str = "rank"):
+            return F.coalesce(
+                F.sum(F.when(F.col("has_out") == 0, F.col(col))), F.lit(0.0)
+            )
+
+        restored = ckpt.resume(max_iter)
+        if restored is not None:
+            restored = restored.select("conv_id", "rank", "has_out")
+            dmass = restored.agg(dangling_sum()).collect()[0][0]
+            ranks = restored.repartition(n_parts, "conv_id")
+        elif initial_ranks is not None:
+            # one job: the seeded state, its total and its dangling mass
+            obs = Observation()
+            seeded = (
+                vertices.join(
+                    initial_ranks.select(
+                        "conv_id", F.col("rank").alias("_r0")
+                    ),
+                    "conv_id",
+                    "left",
+                )
+                .select(
+                    "conv_id",
+                    F.coalesce("_r0", F.lit(1.0 / n)).alias("_r"),
+                    "has_out",
+                )
+                .observe(
+                    obs, F.sum("_r").alias("t"), dangling_sum("_r").alias("d")
+                )
+                .localCheckpoint(eager=True)
+            )
+            total = obs.get["t"] or 1.0
+            dmass = obs.get["d"] / total
+            ranks = seeded.select(
                 "conv_id",
-                F.coalesce("_r0", F.lit(1.0 / n)).alias("_r"),
+                (F.col("_r") / F.lit(float(total))).alias("rank"),
                 "has_out",
             )
-            .observe(
-                obs, F.sum("_r").alias("t"), dangling_sum("_r").alias("d")
+        else:
+            ranks = vertices.select(
+                "conv_id", F.lit(1.0 / n).alias("rank"), "has_out"
             )
-            .localCheckpoint(eager=True)
-        )
-        total = obs.get["t"] or 1.0
-        dmass = obs.get["d"] / total
-        ranks = seeded.select(
-            "conv_id",
-            (F.col("_r") / F.lit(float(total))).alias("rank"),
-            "has_out",
-        )
-    else:
-        ranks = vertices.select(
-            "conv_id", F.lit(1.0 / n).alias("rank"), "has_out"
-        )
-        dmass = n_dangling / n
+            dmass = n_dangling / n
 
-    if personalization:
-        # teleport vector p(v): 1/|S| on the source set, else 0
-        p_v = F.when(
-            F.col("conv_id").isin(*personalization),
-            F.lit(1.0 / len(personalization)),
-        ).otherwise(F.lit(0.0))
-    else:
-        p_v = F.lit(1.0 / n)
-    deltas: list[float] = []
-    superstep_secs: list[float] = []
-    converged = False
-    it = start_iter
-    try:
-        for it in range(start_iter, max_iter):
-            t_iter = time.monotonic()
+        if personalization:
+            # teleport vector p(v): 1/|S| on the source set, else 0
+            p_v = F.when(
+                F.col("conv_id").isin(*personalization),
+                F.lit(1.0 / len(personalization)),
+            ).otherwise(F.lit(0.0))
+        else:
+            p_v = F.lit(1.0 / n)
+        deltas: list[float] = []
+        converged = False
+        for it in ckpt.steps(max_iter):
             gathered = (
                 edges_norm.join(
                     ranks.select(
@@ -251,20 +240,15 @@ def pagerank(
             )
             dmass = seen["dmass"]
             deltas.append(delta)
-            superstep_secs.append(time.monotonic() - t_iter)
             if delta < tol:
                 converged = True
                 break
-    finally:
-        # loop-invariant caches: the result is checkpointed state, so
-        # nothing downstream reads them (refresh reuses one session)
-        edges_norm.unpersist()
-        vertices.unpersist()
-
+    # the loop-invariant caches are released: the result is checkpointed
+    # state, so nothing downstream reads them (refresh reuses one session)
     return PageRankResult(
         ranks.select("conv_id", "rank"),
-        it + 1,
+        ckpt.iterations,
         converged,
         deltas,
-        superstep_secs,
+        ckpt.superstep_secs,
     )

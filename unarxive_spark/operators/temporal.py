@@ -80,57 +80,56 @@ def temporal_reachability(
     ``strict=True`` raises if labels still improve at ``max_rounds``
     (a silent hop-bounded result is not reachability)."""
     spark = tedges.sparkSession
-    ckpt = CheckpointManager(spark, None)
-    adj = (
-        tedges.select("src", "dst", "et")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition("src")
-        .cache()
-    )
     state = spark.createDataFrame(
         [(source, 0)], "conv_id string, reach_us long"
     )
     n_improved = 0
-    for rnd in range(max_rounds):
-        relaxed = (
-            adj.join(
-                state.withColumnRenamed("conv_id", "src"), "src"
-            )
-            .filter(F.col("et") >= F.col("reach_us"))
-            .select(
-                F.col("dst").alias("conv_id"),
-                F.col("et").alias("reach_us"),
-                F.lit(None).cast("long").alias("_old"),
-            )
+    with CheckpointManager(spark, None) as ckpt:
+        adj = ckpt.cache(
+            tedges.select("src", "dst", "et")
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition("src")
         )
-        # the state leg doubles as the old-arrival carrier, so the
-        # improvement count is a column diff on the materialized state
-        # instead of a second state-table join per superstep (guide
-        # §2.4; same fusion as connected_components/pagerank)
-        new_state = (
-            state.select(
-                "conv_id", "reach_us", F.col("reach_us").alias("_old")
+        for rnd in ckpt.steps(max_rounds):
+            relaxed = (
+                adj.join(
+                    state.withColumnRenamed("conv_id", "src"), "src"
+                )
+                .filter(F.col("et") >= F.col("reach_us"))
+                .select(
+                    F.col("dst").alias("conv_id"),
+                    F.col("et").alias("reach_us"),
+                    F.lit(None).cast("long").alias("_old"),
+                )
             )
-            .unionByName(relaxed)
-            .groupBy("conv_id")
-            .agg(
-                F.min("reach_us").alias("reach_us"),
-                F.max("_old").alias("_old"),
+            # the state leg doubles as the old-arrival carrier, so the
+            # improvement count is a column diff on the materialized state
+            # instead of a second state-table join per superstep (guide
+            # §2.4; same fusion as connected_components/pagerank)
+            new_state = (
+                state.select(
+                    "conv_id", "reach_us", F.col("reach_us").alias("_old")
+                )
+                .unionByName(relaxed)
+                .groupBy("conv_id")
+                .agg(
+                    F.min("reach_us").alias("reach_us"),
+                    F.max("_old").alias("_old"),
+                )
             )
-        )
-        new_state, n_improved = ckpt.superstep(
-            rnd,
-            new_state,
-            "n_improved",
-            F.count_if(
-                F.col("_old").isNull() | (F.col("reach_us") < F.col("_old"))
-            ),
-        )
-        state = new_state.select("conv_id", "reach_us")
-        if n_improved == 0:
-            break
-    adj.unpersist()
+            new_state, n_improved = ckpt.superstep(
+                rnd,
+                new_state,
+                "n_improved",
+                F.count_if(
+                    F.col("_old").isNull()
+                    | (F.col("reach_us") < F.col("_old"))
+                ),
+            )
+            state = new_state.select("conv_id", "reach_us")
+            if n_improved == 0:
+                break
     if strict and n_improved > 0:
         raise RuntimeError(
             f"temporal reachability still improving after "

@@ -8,9 +8,36 @@ mid-iteration". Reference analog: the batch resume protocol —
 (/root/reference/src/match_references_openalex.py:672-694), plus per-chunk
 runtime/success metrics (:637-661).
 
-Superstep loops make ONE call per superstep,
-:meth:`CheckpointManager.superstep`, which runs one Spark job over the
-new state and then, in durable mode, commits it:
+A superstep loop runs inside one manager, which owns what every loop
+would otherwise write for itself::
+
+    with CheckpointManager(spark, checkpoint_dir) as ckpt:
+        adj = ckpt.cache(...)             # released when the block exits
+        state = ckpt.resume(max_iter)     # None: fresh or non-durable run
+        if state is None:
+            state = ...                   # iteration 0's input
+        for it in ckpt.steps(max_iter):   # ckpt.iterations .. max_iter-1
+            state, metric = ckpt.superstep(it, step(state), "name", metric)
+            if metric == 0:
+                break
+    return Result(state, ckpt.iterations)
+
+- ``cache`` caches a loop-invariant frame and registers it; leaving
+  the block unpersists every registered frame, whether the body
+  returned or raised (a result lazy over one is materialized inside).
+- ``resume(stop)`` restores the last committed iteration, capped at
+  ``stop - 1``, so a rerun with a shorter horizon returns what a fresh
+  run with that horizon would.
+- ``iterations`` counts the supersteps done, restored ones included;
+  ``superstep(it, ...)`` sets it to ``it + 1`` and ``steps`` starts
+  from it. Loops numbered otherwise (bow-tie, Louvain levels) pass
+  their own numbers to ``superstep``.
+- ``superstep_secs``: per superstep, the wall time from its ``steps``
+  yield (or the previous superstep) to the end of the call.
+
+Each loop keeps its own convergence test and its own exhaustion error.
+:meth:`CheckpointManager.superstep` runs one Spark job over the new
+state and then, in durable mode, commits it:
 
 1. **Materialize** (:meth:`~CheckpointManager.write_state`) — the state
    is local-checkpointed: its plan runs exactly once and the blocks cut
@@ -37,10 +64,10 @@ Ordering: the state write lands before the commit is renamed into place,
 so a crash between the two replays one iteration (idempotent overwrite)
 rather than corrupting state, and a crash inside the commit leaves only
 the hidden file, which every reader skips. Resume
-(:meth:`~CheckpointManager.last_committed`) takes the max committed
-iteration. "Fresh run" is decided on the driver (no ``_lineage``
-directory, or no commit in it yet); anything in it that is neither hidden
-nor a readable commit raises.
+(:meth:`~CheckpointManager.resume`) starts from the max committed
+iteration (:meth:`~CheckpointManager.last_committed`). "Fresh run" is
+decided on the driver (no ``_lineage`` directory, or no commit in it
+yet); anything in it that is neither hidden nor a readable commit raises.
 
 On a real deployment the parquet directories become Iceberg tables;
 the protocol is identical. The engine runs on parquet because no Iceberg
@@ -63,6 +90,7 @@ from __future__ import annotations
 import json
 import re
 import time
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -83,13 +111,48 @@ _PARTITION_BINS = 1 << 20
 
 
 class CheckpointManager:
-    """Manages ``{root}/iter=N`` state snapshots + ``{root}/_lineage``."""
+    """Manages ``{root}/iter=N`` state snapshots + ``{root}/_lineage``,
+    and drives one superstep loop (module docstring)."""
 
     def __init__(self, spark: SparkSession, root: str | None):
         self.spark = spark
         self.root = root.rstrip("/") if root else None
-        self._t0 = time.monotonic()
+        self._t0 = self._t_step = time.monotonic()
         self._fs_handle = None
+        self._cached: list[DataFrame] = []
+        self.iterations = 0
+        self.superstep_secs: list[float] = []
+
+    def __enter__(self) -> CheckpointManager:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._cached:
+            df.unpersist()
+        self._cached.clear()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, unpersisted when the ``with`` block exits."""
+        self._cached.append(df.cache())
+        return df
+
+    def resume(self, stop: int) -> DataFrame | None:
+        """The state of the last committed iteration, capped at ``stop -
+        1``, with ``iterations`` set past it; None on a fresh or
+        non-durable run."""
+        last = self.last_committed() if stop > 0 else None
+        if last is None:
+            return None
+        it = min(last, stop - 1)
+        self.iterations = it + 1
+        return self.restore(it)
+
+    def steps(self, stop: int) -> Iterator[int]:
+        """Iteration numbers ``iterations .. stop - 1``; each yield starts
+        that superstep's clock."""
+        for it in range(self.iterations, stop):
+            self._t_step = time.monotonic()
+            yield it
 
     @property
     def enabled(self) -> bool:
@@ -132,7 +195,9 @@ class CheckpointManager:
 
         ``observe`` maps names to more aggregate Columns over ``state``,
         observed in the same job; with it the call returns ``(frame,
-        metric value, {name: value})``."""
+        metric value, {name: value})``. Sets ``iterations`` to
+        ``iteration + 1`` and appends the superstep's wall time to
+        ``superstep_secs``."""
         observed = {f"x_{k}": c for k, c in (observe or {}).items()}
         if isinstance(metric, Column):
             observed["metric"] = metric
@@ -146,6 +211,10 @@ class CheckpointManager:
                 metric_name,
                 float("nan") if value is None else float(value),
             )
+        now = time.monotonic()
+        self.superstep_secs.append(now - self._t_step)
+        self._t_step = now
+        self.iterations = iteration + 1
         if observe is None:
             return out, value
         return out, value, {k: got[f"x_{k}"] for k in observe}

@@ -31,12 +31,3 @@ def write_edges_bucketed(
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver-provided parquet tables of a scale factor."""
-    names = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -112,19 +112,3 @@ def session_ref_rates_stream(
             "n_refs",
         )
     )
-
-
-def hourly_ref_rates_stream(transcripts: DataFrame) -> DataFrame:
-    """Watermarked tumbling-window aggregation (late data tolerated up to
-    1 hour): references mined per hour — the streaming counterpart of the
-    batch hourly rollup."""
-    pairs = mine_ref_pairs_stream(transcripts)
-    return (
-        pairs.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_refs"))
-        .select(
-            F.col("win.start").alias("hour_start"),
-            "n_refs",
-        )
-    )
